@@ -368,7 +368,8 @@ def _infer_parser(field: T.StructField, lengths: dict) -> SparkParser:
         return create_str2strnullable(lengths.get(field.name))
     if isinstance(dt, T.DateType):
         return parse_shitty_date_as_date()
-    if isinstance(dt, T.TimestampType):
+    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
+        # NTZ: the bound cast keeps the wall-clock value (session tz is UTC)
         return parse_shitty_datetime()
     if isinstance(dt, T.DayTimeIntervalType):
         return parse_shitty_time

@@ -517,26 +517,6 @@ def incremental_minhash_matches(
     )
 
 
-def minhash_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 5,
-    num_hashes: int = 16,
-    bands: int = 4,
-) -> DataFrame:
-    """LSH candidate pairs: split the signature into ``bands`` rows-per-band
-    groups, bucket by the band hash, emit pairs sharing ≥1 bucket. Join cost
-    is per-bucket, not n² — the 100 TB path for fuzzy dedup."""
-    # The signature frame is tiny relative to the corpus (num_hashes longs
-    # per doc) and feeds BOTH sides of the candidate self-join on a
-    # different key than it was aggregated on — materialize it once instead
-    # of recomputing the shingle/hash pipeline per side. (On a cluster this
-    # would be a persist to MEMORY_AND_DISK or a checkpoint.)
-    sig = minhash_signatures(df, id_col, text_col, n, num_hashes).localCheckpoint(eager=True)
-    return minhash_pairs_from_signatures(sig, id_col, num_hashes, bands)
-
-
 def minhash_pairs_from_signatures(
     sig: DataFrame,
     id_col: str,
@@ -665,16 +645,6 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFr
     for b in range(bits):
         sim = sim + F.when(F.col(f"b{b}") > 0, F.lit(1 << b)).otherwise(0)
     return agg.select(F.col("_id").alias(id_col), sim.alias("simhash"))
-
-
-def simhash_pairs(
-    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3
-) -> DataFrame:
-    """Near-dup pairs with Hamming(simhash) <= k: band the 32 bits into 4
-    bytes (pigeonhole: distance ≤3 ⇒ some byte equal), join per band, filter
-    exact Hamming with bit_count(xor)."""
-    sig = simhash(df, id_col, text_col).localCheckpoint(eager=True)
-    return simhash_pairs_from_signatures(sig, id_col, max_hamming)
 
 
 def simhash_pairs_from_signatures(

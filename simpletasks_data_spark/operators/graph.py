@@ -17,6 +17,12 @@ Algorithm: iterative min-label propagation with path-halving.
   the SAME action that materializes the round's labels (``Observation``
   on the per-round ``localCheckpoint``), so each round costs exactly one
   job; the loop stops at ``changed == 0``.
+- Every such gate (here and in pagerank, k_core, bfs_reach, sssp_bounded)
+  goes through ``session.observed``. In classic PySpark (checked on
+  4.1.2), an observation the optimizer pruned makes ``.get`` raise
+  ``Py4JJavaError`` at once (an assertion in ``PythonSQLUtils.toPyRow``);
+  it does not hang. The helper then falls back to aggregating the same
+  metrics over the un-observed frame.
 - Each round checkpoints: iterative lineage otherwise grows a plan per
   round and re-executes the whole history on every action. On a cluster
   this would be ``persist(MEMORY_AND_DISK)`` + periodic reliable
@@ -39,8 +45,10 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import observed
 
 __all__ = ["connected_components", "connected_components_bigstar", "dedup_clusters", "pagerank", "triangle_count", "triangle_count_degree_oriented", "label_propagation", "random_walks", "walk_cooccurrence"]
 
@@ -68,14 +76,13 @@ def connected_components(
     # The node count for the broadcast gate rides the init's eager
     # checkpoint as an Observation (r12: the separate lab.count() job is
     # gone — one job per CC call saved, the kmeans-gate pattern).
-    _init_obs = Observation()
-    lab = (
+    lab, n_nodes = observed(
         edges.groupBy(F.col("u").alias("id"))
         .agg(F.min("v").alias("_mn"))
-        .select("id", F.least(F.col("id"), F.col("_mn")).alias("lab"))
-        .observe(_init_obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .select("id", F.least(F.col("id"), F.col("_mn")).alias("lab")),
+        F.count(F.lit(1)).alias("n"),
     )
+    lab = lab.localCheckpoint(eager=True)
     # Gated node-side broadcast (guide-of-record §3.1, the pagerank
     # pattern): the label frame is NODE-bounded, the edge frame is not;
     # the checkpointed frames carry no stats so Spark would sort-merge
@@ -85,7 +92,7 @@ def connected_components(
     # first suggested a regression — that was host-throughput noise
     # (2x control swings); decide iterative-join strategy from plan
     # metrics, not wall seconds, on this box.
-    _bcast_nodes = int(_init_obs.get["n"]) <= 2_000_000
+    _bcast_nodes = int(n_nodes()["n"]) <= 2_000_000
     for _ in range(max_iter):
         # min over self + neighbor labels (one shuffle on id). The self
         # rows carry a marker so the SAME aggregation also yields the old
@@ -124,13 +131,9 @@ def connected_components(
                 "_old",
             )
         )
-        obs = Observation()
-        cmp = (
-            new.observe(obs, F.count_if(F.col("lab") != F.col("_old")).alias("changed"))
-            .select("id", "lab")
-        )
-        lab = cmp.localCheckpoint(eager=True)
-        if int(obs.get["changed"]) == 0:
+        cmp, changed = observed(new, F.count_if(F.col("lab") != F.col("_old")).alias("changed"))
+        lab = cmp.select("id", "lab").localCheckpoint(eager=True)
+        if int(changed()["changed"]) == 0:
             break
     return lab.select("id", F.col("lab").alias("component"))
 
@@ -181,13 +184,13 @@ def connected_components_bigstar(
     )
 
     def _checkpoint_observed(edges: DataFrame):
-        obs = Observation()
-        out = edges.observe(
-            obs,
+        out, read = observed(
+            edges,
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.sum(F.xxhash64("u", "v")), F.lit(0)).alias("chk"),
-        ).localCheckpoint(eager=True)
-        row = obs.get
+        )
+        out = out.localCheckpoint(eager=True)
+        row = read()
         return out, (row["n"], row["chk"])
 
     prev_sig = None
@@ -353,11 +356,9 @@ def pagerank(
     # bounds the built relation to ~32 MB, well inside broadcast range.
     # The gate count rides the eager checkpoint as an Observation (r12):
     # no dedicated count() job.
-    _nr_obs = Observation()
-    nr = nr.observe(_nr_obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
-        eager=True
-    )
-    _bcast_nodes = int(_nr_obs.get["n"]) <= broadcast_nodes_limit
+    nr, n_nodes = observed(nr, F.count(F.lit(1)).alias("n"))
+    nr = nr.localCheckpoint(eager=True)
+    _bcast_nodes = int(n_nodes()["n"]) <= broadcast_nodes_limit
     # p0 = 1.0 per (seed) node on the grid
     if reset_ids is None:
         scores = nr.select("id", F.lit(unit).cast("long").alias("_sn"))
@@ -664,8 +665,12 @@ def k_core(edges: DataFrame, k: int = 3, max_rounds: int = 8) -> DataFrame:
         deg = nodes.join(degs, "src", "left").select(
             "src", F.coalesce(F.col("_d"), F.lit(0)).alias("_d")
         )
-        low = deg.where(F.col("_d") < k).select("src").localCheckpoint(eager=True)
-        if low.count() == 0:
+        # the low-degree count rides the checkpoint job (no count() job)
+        low, n_low = observed(
+            deg.where(F.col("_d") < k).select("src"), F.count(F.lit(1)).alias("n")
+        )
+        low = low.localCheckpoint(eager=True)
+        if n_low()["n"] == 0:
             break
         if max_rounds is not None and r > max_rounds:
             warnings.warn(
@@ -777,13 +782,12 @@ def bfs_reach(edges: DataFrame, seeds: DataFrame, radius: int = 3) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     seed_col = seeds.columns[0]
-    _v_obs = Observation()
-    visited = (
-        seeds.select(F.col(seed_col).alias("seed"), F.col(seed_col).alias("node"))
-        .observe(_v_obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+    visited, n_visited = observed(
+        seeds.select(F.col(seed_col).alias("seed"), F.col(seed_col).alias("node")),
+        F.count(F.lit(1)).alias("n"),
     )
-    frontier, n_frontier = visited, int(_v_obs.get["n"])
+    visited = visited.localCheckpoint(eager=True)
+    frontier, n_frontier = visited, int(n_visited()["n"])
     out = None
     for r in range(1, radius + 1):
         # Gated frontier-side broadcast (the pagerank pattern): the
@@ -791,20 +795,19 @@ def bfs_reach(edges: DataFrame, seeds: DataFrame, radius: int = 3) -> DataFrame:
         # is edge-sized. The frontier size rides each round's eager
         # checkpoint as an Observation (r12) — no per-round count() job.
         _f = F.broadcast(frontier) if n_frontier <= 2_000_000 else frontier  # b: gated
-        _n_obs = Observation()
-        nxt = (
+        nxt, n_next = observed(
             _f.join(und, _f["node"] == und["src"])
             .select("seed", F.col("dst").alias("node"))
             .distinct()
-            .join(visited, ["seed", "node"], "left_anti")
-            .observe(_n_obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .join(visited, ["seed", "node"], "left_anti"),
+            F.count(F.lit(1)).alias("n"),
         )
+        nxt = nxt.localCheckpoint(eager=True)
         visited = visited.unionByName(nxt).localCheckpoint(eager=True)
         cnt = nxt.groupBy("seed").agg(F.count(F.lit(1)).cast("long").alias("n_new"))
         cnt = cnt.select("seed", F.lit(r).cast("long").alias("radius"), "n_new")
         out = cnt if out is None else out.unionByName(cnt)
-        frontier, n_frontier = nxt, int(_n_obs.get["n"])
+        frontier, n_frontier = nxt, int(n_next()["n"])
     return out
 
 
@@ -837,17 +840,16 @@ def sssp_bounded(
         .localCheckpoint(eager=False)
     )
     src_col = sources.columns[0]
-    _d_obs = Observation()
-    dist = (
+    dist, n_read = observed(
         sources.select(
             F.col(src_col).alias("src_id"),
             F.col(src_col).alias("node"),
             F.lit(0).cast("long").alias("dist"),
-        )
-        .observe(_d_obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        ),
+        F.count(F.lit(1)).alias("n"),
     )
-    n_dist = int(_d_obs.get["n"])
+    dist = dist.localCheckpoint(eager=True)
+    n_dist = int(n_read()["n"])
     for _ in range(max_hops):
         # Gated frontier-side broadcast (the pagerank/CC pattern): the
         # distance frame is (seed-cohort x reached)-bounded, the
@@ -859,15 +861,14 @@ def sssp_bounded(
             _d.join(und, _d["node"] == und["a"])
             .select("src_id", F.col("b").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
         )
-        _r_obs = Observation()
-        dist = (
+        dist, n_read = observed(
             dist.unionByName(relaxed)
             .groupBy("src_id", "node")
-            .agg(F.min("dist").cast("long").alias("dist"))
-            .observe(_r_obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .agg(F.min("dist").cast("long").alias("dist")),
+            F.count(F.lit(1)).alias("n"),
         )
-        n_dist = int(_r_obs.get["n"])
+        dist = dist.localCheckpoint(eager=True)
+        n_dist = int(n_read()["n"])
     return dist
 
 

@@ -53,11 +53,12 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Dict, List, Optional, Tuple
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..mapping import BoundMapping
+from ..session import observed
 from ..sources.base import SRC_POS, ImportMode, Source
 
 ORIG = "_orig_"
@@ -217,10 +218,7 @@ def merge_source(
             cond = cond | (reaches & ~e_c & _falsy_expr(v_c, pre_dtypes["v_" + bc.name]))
         warn_names.append(bc.name)
         pre_metrics.append(F.count_if(cond).alias("w_" + bc.name))
-    obs_pre = Observation()
-    pre_raw = pre  # pre-observe frame: the _metrics fallback aggregates
-    # this one so the failed Observation is never re-fired by a 2nd action
-    pre = pre.observe(obs_pre, *pre_metrics)
+    pre, read_pre = observed(pre, *pre_metrics)
 
     # ---- policy-aware per-key fold: ONE hash agg, no window sort ----------
     # (duplicate-key semantics per the module docstring)
@@ -373,9 +371,8 @@ def merge_source(
     # of WHEN NOT MATCHED BY SOURCE; importtask.py:299-301).
     nf_pred = F.col("_was_target") & ~F.col("_seen")
 
-    obs_post = Observation()
-    out = out.observe(
-        obs_post,
+    out, read_post = observed(
+        out,
         F.count_if(nf_pred).alias("not_found"),
         F.count_if(invalid).alias("rejected"),
     )
@@ -387,46 +384,17 @@ def merge_source(
     # would be a reliable checkpoint or an exchange reuse.
     out = out.localCheckpoint(eager=True)
 
-    def _metrics(obs, frame, exprs):
-        """Observation.get, tolerating plans where the optimizer's
-        empty-relation propagation collapsed the join and discarded a
-        CollectMetrics child (e.g. UPDATE-only source against a
-        statically-empty target: the gate folds to WHERE false, the
-        whole subtree is pruned, and the observation never fires even
-        though the pre-stream counters are nonzero). Fallback: run the
-        SAME metric expressions as a real aggregation over the lazy
-        frame — one extra tiny job, only in the pruned degenerate case.
-        Found by the randomized policy-matrix test's shrink."""
-        try:
-            return obs.get
-        except Exception:
-            return frame.agg(*exprs).first().asDict()  # c: 1row
-
-    pre_m = _metrics(obs_pre, pre_raw, pre_metrics)
-    post_m = _metrics(
-        obs_post,
-        out,
-        [F.count_if(nf_pred).alias("not_found"), F.count_if(invalid).alias("rejected")],
-    )
+    # An optimizer-pruned observation (the randomized policy-matrix
+    # test's shrink found one: UPDATE-only source against a statically
+    # empty target) falls back to an aggregation inside ``observed``.
+    pre_m = read_pre()
+    post_m = read_post()
     rejected = int(post_m["rejected"])
     not_found = int(post_m["not_found"])
 
     if rejected:
-        # del updates[item]: creating items vanish, updated items revert to
-        # their stored pre-image, history flags discard (importtask.py:
-        # 287-292). Applied lazily over the checkpointed frame.
-        out = out.where(~(invalid & F.col(CREATING)))
-        out = out.select(
-            *[F.when(invalid, F.col(ORIG + c)).otherwise(F.col(c)).alias(c) for c in target_cols],
-            *[F.col(ORIG + c) for c in target_cols],
-            F.col(CREATING),
-            *[
-                F.when(invalid, F.lit(False)).otherwise(F.col(HIST + c)).alias(HIST + c)
-                for c in tracked
-            ],
-            F.col("_was_target"),
-            F.col("_seen"),
-        )
+        # Applied lazily over the checkpointed frame (importtask.py:287-292).
+        out = revert_rejected(out, invalid, target_cols)
 
     nf_handled = source.on_data_not_found(finalize_image(out.where(nf_pred), target_cols))
 
@@ -467,6 +435,18 @@ def merge_source(
     }
     warnings = {n: int(pre_m["w_" + n]) for n in warn_names if int(pre_m["w_" + n])}
     return MergeStepResult(image=new_image, counters=counters, warnings=warnings)
+
+
+def revert_rejected(image: DataFrame, invalid: Column, target_cols: List[str]) -> DataFrame:
+    """``del updates[item]`` for rows where ``invalid`` holds: creating
+    items vanish, updated items revert to their stored pre-image, and
+    their history flags discard (importtask.py:287-292, 319-321). Every
+    other column passes through in place."""
+    reverted = {c: F.when(invalid, F.col(ORIG + c)).otherwise(F.col(c)) for c in target_cols}
+    for c in image.columns:
+        if c.startswith(HIST):
+            reverted[c] = F.when(invalid, F.lit(False)).otherwise(F.col(c))
+    return image.where(~(invalid & F.col(CREATING))).withColumns(reverted)
 
 
 def dict_dtype(df: DataFrame, col: str):

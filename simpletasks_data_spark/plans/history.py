@@ -36,13 +36,6 @@ class HistorySpec:
     fixed_date: Optional[datetime.datetime] = None  # deterministic runs/tests
 
 
-def changed_expr(cols: List[str]):
-    e = F.lit(False)
-    for c in cols:
-        e = e | ~F.col(c).eqNullSafe(F.col(ORIG + c))
-    return e
-
-
 def build_history(image: DataFrame, spec: HistorySpec) -> DataFrame:
     """History rows from the working image: non-creating rows where a
     tracked column's per-(source,column) history flag is set (the Spark

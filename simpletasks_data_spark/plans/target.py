@@ -87,6 +87,3 @@ class TargetTable:
         os.rename(tmp, self.path)
         if os.path.exists(old):
             shutil.rmtree(old, ignore_errors=True)
-
-    def current(self, spark: SparkSession) -> DataFrame:
-        return self.read(spark)

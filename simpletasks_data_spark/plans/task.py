@@ -28,7 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..mapping import BoundMapping
-from ..operators.merge import CREATING, HIST, ORIG, finalize_image, init_image, merge_source
+from ..operators.merge import CREATING, HIST, ORIG, finalize_image, init_image
+from ..operators.merge import merge_source, revert_rejected
 from ..sources.base import Source
 from .history import HistorySpec, build_history
 from .target import TargetTable
@@ -182,16 +183,7 @@ class ImportJob:
         # Rejected items: creating rows vanish, updated rows revert
         # (importtask.py:319-321 — their pending updates are not applied).
         if agg["rejected"]:
-            image = image.where(~(invalid & F.col(CREATING)))
-            image = image.select(
-                *[F.when(invalid, F.col(ORIG + c)).otherwise(F.col(c)).alias(c) for c in target_cols],
-                *[F.col(ORIG + c) for c in target_cols],
-                F.col(CREATING),
-                *[
-                    F.when(invalid, F.lit(False)).otherwise(F.col(HIST + c)).alias(HIST + c)
-                    for c in tracked
-                ],
-            )
+            image = revert_rejected(image, invalid, target_cols)
 
         # ---- history CDC frame (plans/history.py) ------------------------
         if self.keep_history and tracked:

@@ -44,6 +44,7 @@ from .streaming.ingest import replay_tuned
 from .operators import corpus as CP
 from .operators import dedupe as DD
 from .operators import similarity as SIM
+from .session import _SESSION_STORE, session_store
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -121,7 +122,9 @@ def _fresh_scratch_dir(name: str, sf_dir: str) -> str:
 # (tests/test_oracle_parity.py) pins the rotated-out remainder.
 # COVERAGE.md records each query's last-green round. Names listed here
 # float to the front in this order; the remainder keep registration
-# order behind them.
+# order behind them. Each name appears once: a historical window below
+# lists only the names no earlier window holds, and an unknown or
+# repeated name raises at import (_validate_check_first).
 _CHECK_FIRST = [
     # ==== round-12 window (driver checks the first 50) ====
     # -- changed this round (regression gate):
@@ -196,37 +199,19 @@ _CHECK_FIRST = [
     # -- changed this round (regression gate):
     #    * session 3: window-form big-star rounds (CC), packed HyperBall
     #      registers, lead()-paired suffix doubling, single-SQL Hilbert:
-    "dbscan_embeddings_grid",
-    "dedup_clusters_bigstar",
-    "graph_hyperball_suppliers",
-    "suffix_ranks_corpus",
-    "hilbert_layout_orders",
     #    * session 3, serialized-stage audit: AQE-coalesce pin on the
     #      containment verify, probe-side spreads (knn family,
     #      permutation relabeling, substring spans), multi-consumer
     #      tokenize plan-cuts (token budget, JSD):
-    "dedup_containment",
-    "knn_bruteforce",
-    "knn_quantized_rescore",
-    "matryoshka_recall_eval",
-    "permutation_test_urgent_price",
-    "token_budget_selection",
-    "jsd_drift_by_source",
-    "dedup_exact_substrings",
     #    * paired-BIGINT overflow gate + fail-loud NULL/ragged-vec guard
     #      (r10 verdict item 1 / ADVICE): kmeans_lloyd / pca_power_top1
     #      count rows up front and switch _qsum to one DECIMAL(38,0)
     #      sum when a group can reach 2^31 rows; same integers below the
     #      gate. Plus the unrolled assign now parses as ONE SQL string
     #      (identical tree, ~3x cheaper plan construction):
-    "pca_top_component",
-    "kmeans_embeddings",
-    "kmeans_cluster_topics",
-    "knn_ivf_kmeans",
     #    * splittable ordered CSV (r10 verdict item 2): byte-range
     #      line-aligned partitions behind option("splittable"); the
     #      default per-file path rides the same partition-listing code:
-    "csv_import_roundtrip",
     #    * replay_tuned decorator (r10 verdict item 3): all 16 bounded
     #      streaming replays now scope shuffle partitions to 4 for the
     #      call (state-store task floor; semantics untouched):
@@ -240,7 +225,6 @@ _CHECK_FIRST = [
     "streaming_hourly_rollup",
     "streaming_late_data_drop",
     "streaming_left_outer_attribution",
-    "streaming_minhash_dedup",
     "streaming_running_totals",
     "streaming_sessions",
     "streaming_sliding_windows",
@@ -249,58 +233,27 @@ _CHECK_FIRST = [
     #    * session-level cluster store (r10 verdict item 4):
     #      dedup_clusters memoizes its checkpointed result per
     #      (session, sf_dir); the five composed consumers ride:
-    "dedup_clusters",
-    "cluster_aware_holdout_split",
-    "crossdup_layer_matrix",
-    "dedup_retained_corpus",
-    "dedup_rate_by_source",
-    "dedup_canonical_by_quality",
     #    * PPJoin stages grew the probe-only materialize hook (ADVICE
     #      r10; production path expression-identical):
-    "dedup_ngram_jaccard",
     #    * r11 OPTIMIZATION session (gated node-side broadcasts in the
     #      iterative graph operators; percolation thread overlap; shared
     #      tf store for the retrieval stack; verified-pairs store feeding
     #      the eval's truth leg; plan cuts in pipeline/mad_outliers; LPA
     #      edge-frame checkpoint) — every query whose execution path
     #      changed rides the regression gate:
-    "pagerank_customer_supplier",
-    "ppr_seeded_customers",
-    "hits_customer_supplier",
-    "graph_percolation_supplier",
-    "communities_suppliers",
-    "sssp_hub_suppliers",
-    "graph_reach_hubs",
-    "bm25_related_docs",
-    "hybrid_rrf_retrieval",
-    "dedup_minhash_eval",
-    "pipeline_pretraining_corpus",
-    "mad_outliers_by_segment",
-    "als_factors_retail",
-    "als_recommend_topk",
     # -- stalest rotation (last driver row r3, plus one r4; all pinned
     #    every run by the local oracle-parity suite) --
-    "dedup_containment",
-    "dedup_minhash_verified",
-    "dedup_passages",
-    "dedup_semantic_clusters",
-    "expectations_orders",
     "format_list_roundtrip",
-    "merge_multi_source",
     "merge_write_commit",
     "multimodal_png_roundtrip",
     "multimodal_ppm_roundtrip",
     "overlap_join_order_windows",
     "profile_orders",
-    "q5_local_supplier_volume",
     "quality_unigram_logprob",
-    "range_join_purchase_clicks",
     "rolling_7d_active_users",
     "scd2_user_state",
     "sketch_cms_heavy_hitters",
-    "supplier_triangles",
     "survival_km_first_purchase",
-    "temperature_mixture_langs",
     "acid_compaction",
     # ---- position 51+ from here: previous windows retained for
     #      documentation ----
@@ -311,10 +264,6 @@ _CHECK_FIRST = [
     #      groupBy(d) with paired-BIGINT exact sums (same integers as the
     #      old DECIMAL(38,0)); the power-iteration dot projects once per
     #      row. Same trajectories, 2-2.5x faster.
-    "pca_top_component",
-    "kmeans_embeddings",
-    "kmeans_cluster_topics",
-    "knn_ivf_kmeans",
     #    * doclen_percentile_grid target rank moved to pure long `div`
     #      (r9 ADVICE item 2) — also one of the six first-timers below.
     "doclen_percentile_grid",
@@ -326,11 +275,8 @@ _CHECK_FIRST = [
     #    * PPJoin candidate stages extracted to _ppjoin_prefix_stages
     #      (shared with the scale probe; r9 ADVICE item 4) — same
     #      expressions, but the two PPJoin-fed queries ride the gate:
-    "dedup_ngram_jaccard",
-    "dedup_minhash_eval",
     #    * TxnTable.read empty-table message rename (r9 ADVICE item 1;
     #      guard path only):
-    "streaming_acid_sink",
     #    * nearest_in_1d "next" window moved off the O(rows^2)
     #      UnboundedFollowing frame onto the reversed growing frame
     #      (12.0 -> 2.9s at sf0.1; values identical):
@@ -355,7 +301,6 @@ _CHECK_FIRST = [
     "events_json_extract",
     "events_sessionize",
     "field_relation_join",
-    "knn_bruteforce",
     "knn_ivf_multiprobe",
     "knn_ivf_signbits",
     "multimodal_features",
@@ -376,10 +321,7 @@ _CHECK_FIRST = [
     "acid_snapshot_rollup",
     "bpe_train_merges",
     "capped_sessions",
-    "communities_suppliers",
     "curation_funnel",
-    "dedup_clusters",
-    "dedup_containment",
     # ==== round-9 window (historical) ====
     # -- changed this round (regression gate):
     #    * dumping NaN contract (r8 ADVICE item 3): _py_format_float now
@@ -401,12 +343,6 @@ _CHECK_FIRST = [
     "export_formatted",
     "merge_write_dry_run",
     "knn_bruteforce_blas",
-    "streaming_acid_sink",
-    "streaming_late_data_drop",
-    "streaming_left_outer_attribution",
-    "kmeans_embeddings",
-    "pca_top_component",
-    "knn_ivf_kmeans",
     #    * knn display-cosine double-round fix (raw-ratio 4-rounding):
     #      knn_bruteforce + blas + ivf_kmeans above already ride; the
     #      other emitters are pinned by the local parity sweep at both
@@ -424,16 +360,12 @@ _CHECK_FIRST = [
     # -- never driver-checked: the FULL 22-query backlog (r8 verdict
     #    item 1 — drain to zero; riskiest/newest first) --
     "decontaminate_semantic_embeddings",
-    "kmeans_cluster_topics",
     "quality_bigram_kn_logprob",
     "split_leakage_ngram_overlap",
     "unigram_kl_train_heldout",
     "low_entropy_docs",
-    "dedup_cluster_size_histogram",
-    "crossdup_layer_matrix",
     "packing_efficiency_report",
     "bpe_encode_stats",
-    "mad_outliers_by_segment",
     "geo_nearest_warehouse",
     "sentence_split_stats",
     "conversion_by_session_depth",
@@ -459,12 +391,6 @@ _CHECK_FIRST = [
     "q1_pricing_summary",
     "q3_shipping_priority",
     "q6_forecast_revenue",
-    "q17_small_quantity_revenue",
-    "dedup_exact",
-    "dedup_minhash",
-    "text_langid",
-    "text_quality",
-    "events_sessionize",
     # ---- position 51+ from here: the previous (round-8) window order
     #      retained for documentation; everything below is pinned every
     #      run by the local oracle-parity suite ----
@@ -478,11 +404,8 @@ _CHECK_FIRST = [
     #    gate. Every other hint-stripped query is pinned by the local
     #    324-query parity sweep + the new bounded-broadcast lint. --
     "corpus_health_by_source",
-    "dedup_rate_by_source",
     "events_retention_cohorts",
-    "cluster_aware_holdout_split",
     "logreg_urgent_orders",
-    "knn_quantized_rescore",
     # -- changed this round: dump_int/dump_percentage/dump_gps moved to
     #    exact python %.Nf semantics (Arrow pandas_udf; java %f and
     #    bround both mis-round shortest-repr ties), dump_str/py_strip to
@@ -492,13 +415,9 @@ _CHECK_FIRST = [
     #    sf0.01 oracle re-check plus test_dumping_fuzz. The two displaced
     #    first-timers (bpe_encode_stats, kmeans_cluster_topics) gained
     #    independent python references this round (test_round8_queries). --
-    "parse_roundtrip",
-    "time_gps_dump",
     # -- changed this round: the exact-Jaccard PPJoin + the MinHash eval
     #    now feed from the materialized _hset_store / signature store
     #    (r7 verdict item 6) instead of rebuilding their shingle frames --
-    "dedup_ngram_jaccard",
-    "dedup_minhash_eval",
     # -- never checked AND hint-stripped this round (first-timers that
     #    double as regression rows) --
     "token_pmi_pairs",
@@ -508,7 +427,6 @@ _CHECK_FIRST = [
     "link_prediction_suppliers",
     "graph_degree_assortativity",
     "welch_ttest_urgent_price",
-    "cramers_v_priority_segment",
     "woe_iv_price_bins",
     "changepoint_daily_revenue",
     "holt_linear_region_forecast",
@@ -520,7 +438,6 @@ _CHECK_FIRST = [
     "tokenizer_fertility_by_lang",
     "rejection_sample_bylength",
     "adamic_adar_suppliers",
-    "cochran_armitage_priority_trend",
     "pr_curve_metrics_urgent",
     "demographic_parity_urgent",
     "ljung_box_daily_revenue",
@@ -528,7 +445,6 @@ _CHECK_FIRST = [
     "dedup_minhash_scurve",
     "multimodal_shot_changes",
     # -- never checked: round-7 additions (flagship first) --
-    "pipeline_pretraining_corpus",
     "ecod_outliers_embeddings",
     "lift_deciles_urgent",
     "top_session_paths",
@@ -537,40 +453,25 @@ _CHECK_FIRST = [
     "skipgram_pairs_topk",
     "markov_event_transitions",
     "fano_burstiness_events",
-    "anova_price_by_priority",
-    "bh_fdr_urgent_nations",
     # -- never checked: older backlog (streaming + iterative risk) --
-    "ab_test_conversion_ztest",
     "embedding_outliers_by_cell",
-    "streaming_static_enrichment",
-    "streaming_dynamic_gap_sessions",
-    "bpe_encode_stats",
-    "kmeans_cluster_topics",
     # ---- position 51+ from here: the 12-query round-9 remainder (all
     #      pinned every run by the local oracle-parity suite), then the
     #      proven-green catalog in registration order ----
     # round-8 additions (newest = riskiest; split-hygiene / dedup-QA batch)
-    "decontaminate_semantic_embeddings",
-    "split_leakage_ngram_overlap",
-    "unigram_kl_train_heldout",
-    "low_entropy_docs",
-    "dedup_cluster_size_histogram",
-    "crossdup_layer_matrix",
-    "packing_efficiency_report",
-    "mad_outliers_by_segment",
-    "geo_nearest_warehouse",
-    "sentence_split_stats",
-    "conversion_by_session_depth",
-    "repeat_purchase_intervals",
-    "quantile_normalize_sources",
-    "association_rules_brands",
-    "quality_bigram_kn_logprob",
-    "jsonl_gzip_roundtrip",
-    "events_seasonal_anomaly",
-    "funnel_time_to_convert",
-    "chi2_lang_source_independence",
-    "cohort_ltv_curve",
 ]
+
+
+def _validate_check_first(names, registered) -> None:
+    """Fail loudly on a rotation list that names an unregistered query or
+    names one twice: ``_rotated`` would otherwise drop a typo silently and
+    eject a changed query from the driver window."""
+    unknown = [n for n in names if n not in registered]
+    duplicated = sorted({n for n in names if names.count(n) > 1})
+    if unknown or duplicated:
+        raise ValueError(
+            f"_CHECK_FIRST: unknown queries {unknown}, duplicated queries {duplicated}"
+        )
 
 
 def _rotated(d: Dict[str, object]) -> Dict[str, object]:
@@ -954,18 +855,13 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corpus. Production computes signatures once per document ever and keeps
 # them in a persisted store (exactly the premise of dedup_incremental);
 # the in-session analogue is one localCheckpoint per (session, sf_dir),
-# shared by every consumer. Results are identical to from-scratch
-# computation — the store holds deterministic intermediates, never
-# query-specific state.
+# shared by every consumer (``session.session_store``). Results are
+# identical to from-scratch computation — the store holds deterministic
+# intermediates, never query-specific state.
 # ---------------------------------------------------------------------------
 
-_SIGNATURE_STORE: Dict[tuple, tuple] = {}
-_CO_SUPPLY_STORE: Dict[tuple, DataFrame] = {}
 
-
-_TRADE_PAIRS_STORE: Dict[tuple, DataFrame] = {}
-
-
+@session_store
 def _trade_pairs_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct customer<->supplier trade pairs ``(c, s)`` (raw keys)
     from orders x lineitem, materialized once per session+sf_dir —
@@ -974,22 +870,17 @@ def _trade_pairs_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern; at scale this is the co-occurrence table the pipeline
     materializes once). Per-query node-id encodings (offset / parity
     tag) are cheap projections over it."""
-    key = (id(spark.sparkContext), sf_dir)
-    ent = _TRADE_PAIRS_STORE.get(key)
-    if ent is not None:
-        return ent
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
+    return (
         o.join(li, o.o_orderkey == li.l_orderkey)
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    _TRADE_PAIRS_STORE[key] = pairs
-    return pairs
 
 
+@session_store
 def _co_supply_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Supplier co-supply support frame ``(u, v, n)`` (u < v, n = shared
     orders as BIGINT), materialized once per session+sf_dir — six graph
@@ -998,10 +889,6 @@ def _co_supply_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     share a single build. The expansion itself is the sorted
     collect_set + positional slice (bounded by C(suppliers/order, 2)),
     never a lineitem self-join."""
-    key = (id(spark.sparkContext), sf_dir)
-    ent = _CO_SUPPLY_STORE.get(key)
-    if ent is not None:
-        return ent
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     sets = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_suppkey")).alias("ss")
@@ -1009,23 +896,18 @@ def _co_supply_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = sets.select(F.posexplode("ss").alias("i", "u"), "ss").select(
         "u", F.explode(F.slice("ss", F.col("i") + 2, F.size("ss"))).alias("v")
     )
-    sup = (
+    return (
         pairs.groupBy("u", "v")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
         .localCheckpoint(eager=True)
     )
-    _CO_SUPPLY_STORE[key] = sup
-    return sup
 
 
+@session_store
 def _signature_store(spark: SparkSession, sf_dir: str):
     """Returns (hrows, sig): hrows = (_id, _ck, _h) hashed shingle rows
     with the doc's content key; sig = (id, signature) MinHash frame over
     ALL corpus docs. Both materialized once per session+sf_dir."""
-    key = (id(spark.sparkContext), sf_dir)
-    ent = _SIGNATURE_STORE.get(key)
-    if ent is not None:
-        return ent
     corpus = _corpus(spark, sf_dir)
     normed = DD._ensure_parallelism(
         corpus.select(F.col("id").alias("_id"), TX.normalize_text("text").alias("_norm"))
@@ -1050,14 +932,10 @@ def _signature_store(spark: SparkSession, sf_dir: str):
     sig = DD.minhash_signatures_from_hashes(
         hrows.select("_id", "_h"), "id", num_hashes=16
     ).localCheckpoint(eager=True)
-    _SIGNATURE_STORE[key] = (hrows, sig)
     return hrows, sig
 
 
-_HSET_STORE: Dict[tuple, tuple] = {}
-_HSTREAM_STORE: Dict[tuple, DataFrame] = {}
-
-
+@session_store
 def _hstream_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Third store layer (r7 verdict item 6): the DISTINCT (``_id``,
     ``h``) shingle-hash stream, deduplicated from the signature store's
@@ -1067,18 +945,13 @@ def _hstream_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers now start from the materialized stream. Production keeps
     this table persisted next to the signature index — it IS the
     inverted-index posting source."""
-    key = (id(spark.sparkContext), sf_dir)
-    ent = _HSTREAM_STORE.get(key)
-    if ent is not None:
-        return ent
     hrows, _ = _signature_store(spark, sf_dir)
-    hstream = DD._ensure_parallelism(
+    return DD._ensure_parallelism(
         hrows.select("_id", F.col("_h").alias("h")).distinct()
     ).localCheckpoint(eager=True)
-    _HSTREAM_STORE[key] = hstream
-    return hstream
 
 
+@session_store
 def _hset_store(spark: SparkSession, sf_dir: str):
     """Second store layer shared by the VERIFIED dedup family: (hsets, mm)
     where hsets = one row per doc with its distinct shingle-hash SET
@@ -1088,10 +961,6 @@ def _hset_store(spark: SparkSession, sf_dir: str):
     (verified pairs, clustering, retained-corpus cut, removal-rate report)
     otherwise re-runs the same 5M-row groupBy per query. Production keeps
     exactly these two tables persisted next to the signature index."""
-    key = (id(spark.sparkContext), sf_dir)
-    ent = _HSET_STORE.get(key)
-    if ent is not None:
-        return ent
     hrows, _ = _signature_store(spark, sf_dir)
     hsets = (
         hrows.groupBy("_id")
@@ -1099,7 +968,6 @@ def _hset_store(spark: SparkSession, sf_dir: str):
         .localCheckpoint(eager=True)
     )
     mm = hrows.select("_id", "_ck").distinct().localCheckpoint(eager=True)
-    _HSET_STORE[key] = (hsets, mm)
     return hsets, mm
 
 
@@ -1265,21 +1133,12 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
 """
 
 
-_SIMHASH_STORE: Dict[tuple, DataFrame] = {}
-
-
+@session_store
 def _simhash_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash signatures over the corpus, materialized once per
     (session, sf_dir) — the SimHash twin of the MinHash signature store,
     shared by the signature and pair queries."""
-    key = (id(spark.sparkContext), sf_dir)
-    sig = _SIMHASH_STORE.get(key)
-    if sig is None:
-        sig = DD.simhash(_corpus(spark, sf_dir), "id", "text").localCheckpoint(
-            eager=True
-        )
-        _SIMHASH_STORE[key] = sig
-    return sig
+    return DD.simhash(_corpus(spark, sf_dir), "id", "text").localCheckpoint(eager=True)
 
 
 @register("dedup_simhash_signatures", _simhash_sql(pairs=False))
@@ -9590,9 +9449,7 @@ GROUP BY {last}.w0, {last}.w1, {last}.w2
 """
 
 
-_LOGREG_FEATURE_STORE: Dict[tuple, DataFrame] = {}
-
-
+@session_store
 def _logreg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpointed (o_orderkey, y, x1, x2) feature frame shared by the
     logreg family — mirrors ``_LOGREG_FEATURES_SQL``. Materialized once
@@ -9600,11 +9457,7 @@ def _logreg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     conformal, kfold, shapley, permutation test) consume the identical
     frame, and production keeps exactly this feature table persisted —
     the same store discipline as ``_signature_store``."""
-    key = (id(spark.sparkContext), sf_dir)
-    ent = _LOGREG_FEATURE_STORE.get(key)
-    if ent is not None:
-        return ent
-    feats = DD._ensure_parallelism(
+    return DD._ensure_parallelism(
         load(spark, sf_dir, "orders").select(
             "o_orderkey",
             F.when(F.col("o_orderpriority") == "1-URGENT", 1.0)
@@ -9617,8 +9470,6 @@ def _logreg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("x2"),
         )
     ).localCheckpoint(eager=True)
-    _LOGREG_FEATURE_STORE[key] = feats
-    return feats
 
 
 _LOGREG_GD_CACHE: Dict[tuple, list] = {}
@@ -9656,13 +9507,11 @@ def _logreg_gd_multi(
 
     ck = None
     if cache_key is not None and not return_trajectory:
-        # Key on the feature STORE's own (sparkContext id, sf_dir) entry —
-        # never id(features): a frame identity key silently re-opens a
+        # Key on the feature STORE's own session-store entry — never
+        # id(features): a frame identity key silently re-opens a
         # stale-hit-after-GC hole the moment a caller passes a derived
         # frame. Frames not pinned in the store are simply not cached.
-        frame_key = next(
-            (k for k, v in _LOGREG_FEATURE_STORE.items() if v is features), None
-        )
+        frame_key = next((k for k, v in _SESSION_STORE.items() if v is features), None)
         if frame_key is not None:
             ck = (frame_key, cache_key, iterations, lr)
             hit = _LOGREG_GD_CACHE.get(ck)
@@ -20186,3 +20035,7 @@ def hubness_report_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("n_vectors"))
         .orderBy("k_occurrences")
     )
+
+
+# registration is complete: the rotation list must name real queries
+_validate_check_first(_CHECK_FIRST, _QUERIES)

@@ -12,14 +12,21 @@ The engine targets a 1000-executor cluster reading ~100 TB; locally we run
   defaults ANSI on, which would raise instead.
 - Session timezone pinned to UTC so timestamp results are stable across
   environments and comparable to external oracles.
+
+Also home to the two per-session helpers every operator shares:
+``observed`` (a counter read off a job that already runs) and
+``session_store`` (a frame built once per session and input directory).
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import tempfile
+from typing import Any, Callable, Dict, Tuple
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 
 def get_spark(
@@ -80,3 +87,47 @@ def pin_session_confs(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     except Exception:
         pass
+
+
+def observed(df: DataFrame, *metrics: Column) -> Tuple[DataFrame, Callable[[], Dict[str, Any]]]:
+    """Attach ``metrics`` to ``df`` as an ``Observation``: returns the
+    observed frame and a reader for the metric dict, valid once an action
+    has run the observed frame (typically its eager checkpoint) — the
+    counters ride a job that runs anyway.
+
+    The optimizer can prune the observation away: when a plan folds to an
+    empty relation (e.g. an UPDATE-only source against a statically empty
+    target), the CollectMetrics node goes with it and ``Observation.get``
+    raises at once (an assertion in ``PythonSQLUtils.toPyRow``). The
+    reader then runs the same metrics as an aggregation over the
+    un-observed ``df`` — one extra tiny job, only in that degenerate case,
+    and never a second action on the failed observation."""
+    obs = Observation()
+
+    def read() -> Dict[str, Any]:
+        try:
+            return obs.get
+        except Py4JJavaError:
+            return df.agg(*metrics).first().asDict()  # c: 1row
+
+    return df.observe(obs, *metrics), read
+
+
+_SESSION_STORE: Dict[tuple, Any] = {}
+
+
+def session_store(build: Callable[[SparkSession, str], Any]) -> Callable[[SparkSession, str], Any]:
+    """Memoize ``build(spark, sf_dir)`` once per (SparkContext, sf_dir).
+    Stores hold deterministic intermediates (checkpointed frames), never
+    query-specific state, so a hit can never change a result. Keyed on
+    the context object itself, not its ``id``: a stopped context stays
+    referenced, so a new session can never collide with a stale entry."""
+
+    @functools.wraps(build)
+    def get(spark: SparkSession, sf_dir: str) -> Any:
+        key = (build, spark.sparkContext, sf_dir)
+        if key not in _SESSION_STORE:
+            _SESSION_STORE[key] = build(spark, sf_dir)
+        return _SESSION_STORE[key]
+
+    return get

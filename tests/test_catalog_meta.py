@@ -5,6 +5,8 @@ bench coverage, so pin them."""
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from simpletasks_data_spark import queries as Q  # noqa: E402
@@ -14,6 +16,16 @@ def test_check_first_names_are_registered():
     registered = set(Q._QUERIES)
     missing = [n for n in Q._CHECK_FIRST if n not in registered]
     assert not missing, f"rotation list references unknown queries: {missing}"
+
+
+def test_check_first_typo_fails_loudly():
+    """A misspelled or repeated rotation entry raises at import time
+    instead of being dropped from the driver window."""
+    with pytest.raises(ValueError, match="q1_pricing_sumary"):
+        Q._validate_check_first(Q._CHECK_FIRST + ["q1_pricing_sumary"], Q._QUERIES)
+    dup = Q._CHECK_FIRST[0]
+    with pytest.raises(ValueError, match=f"duplicated queries \\['{dup}'\\]"):
+        Q._validate_check_first(Q._CHECK_FIRST + [dup], Q._QUERIES)
 
 
 def test_every_oracle_has_a_query():

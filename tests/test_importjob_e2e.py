@@ -223,6 +223,24 @@ def test_nonnullable_rejection(spark):
     assert ids == [6]
 
 
+def test_update_only_against_empty_target_counts_pruned_observation(spark):
+    """UPDATE-only source into an empty target: the optimizer folds the
+    merge to an empty relation and prunes the counter Observation, so
+    the counters come from ``session.observed``'s fallback aggregation."""
+    target_df = spark.createDataFrame([], TARGET_SCHEMA)
+    target = TargetTable(schema=TARGET_SCHEMA, df=target_df, primary_keys=("id",), lengths=LENGTHS)
+    job = ImportJob(
+        spark,
+        target,
+        sources=[GeneratorSource(SOURCE2_ROWS, MappingB(), mode=ImportMode.UPDATE, name="s2")],
+        dryrun=True,
+    )
+    res = job.run()
+    assert res["sources"][0]["ignored_not_created"] == len(SOURCE2_ROWS)
+    assert res["sources"][0]["read"] == 0
+    assert job.result_df.count() == 0
+
+
 def test_not_found(spark):
     """Target rows never matched by the source are counted not_found."""
     target_df = spark.createDataFrame(

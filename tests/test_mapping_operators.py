@@ -4,6 +4,8 @@ auto-numbering, out-of-range modes, computed with NULL inputs, static,
 field paths — plus the Python-callable parser/computer fallback (PyParser /
 PyComputer pandas-UDF path with err-channel exception tolerance)."""
 
+import datetime
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -63,6 +65,26 @@ def test_binding_infers_parsers(spark):
     out = df.select(*sel).collect()
     assert (out[0].id, out[0].name, out[0].score) == (7, "tool", 12)
     assert (out[1].id, out[1].name, out[1].score) == (None, None, None)
+
+
+def test_binding_infers_parser_for_timestamp_ntz(spark):
+    class M(Mapping):
+        def __init__(self):
+            super().__init__()
+            self.id = self.auto()
+            self.ts = self.auto()
+
+    schema = T.StructType([
+        T.StructField("id", T.LongType(), False),
+        T.StructField("ts", T.TimestampNTZType(), True),
+    ])
+    bound = M().bind(schema)
+    df = src_df(spark, [["1", "24/01/2020 03:04:05"]], ncols=2)
+    v, e = bound.column("ts").exprs(df)
+    row = df.select(v.alias("v"), e.alias("e")).collect()[0]
+    # wall-clock value kept: the session timezone is UTC
+    assert row.v == datetime.datetime(2020, 1, 24, 3, 4, 5)
+    assert row.e is False
 
 
 def test_out_of_range_modes(spark):

@@ -131,9 +131,14 @@ def test_signature_store_reused_across_dedup_family(spark):
     # the store materializes once per (session, sf_dir); the whole fuzzy
     # dedup family must consume the SAME checkpointed frames, and a warm
     # store must not change results
-    from simpletasks_data_spark.queries import _SIGNATURE_STORE, _signature_store
+    from simpletasks_data_spark.queries import _signature_store
+    from simpletasks_data_spark.session import _SESSION_STORE
 
-    _SIGNATURE_STORE.clear()
+    def signature_entries():
+        return [k for k in _SESSION_STORE if k[0] is _signature_store.__wrapped__]
+
+    for k in signature_entries():
+        del _SESSION_STORE[k]
     h1, s1 = _signature_store(spark, SF)
     h2, s2 = _signature_store(spark, SF)
     assert h1 is h2 and s1 is s2, "second lookup rebuilt the store"
@@ -141,7 +146,7 @@ def test_signature_store_reused_across_dedup_family(spark):
     cold = {(r.id_a, r.id_b) for r in Q.queries()["dedup_minhash"](spark, SF).collect()}
     warm = {(r.id_a, r.id_b) for r in Q.queries()["dedup_minhash"](spark, SF).collect()}
     assert cold == warm
-    assert len(_SIGNATURE_STORE) == 1
+    assert len(signature_entries()) == 1
 
 
 def test_passage_dedupe_two_exchanges(spark):
@@ -551,6 +556,60 @@ def test_broadcast_hints_are_declared_bounded():
         "F.broadcast hints without a declared bounded shape (see "
         "BROADCAST_TAG_VOCAB):\n" + "\n".join(bad)
     )
+
+
+def _package_asts():
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(Q.__file__).parent
+    for path in sorted(pkg.rglob("*.py")):
+        yield path.relative_to(pkg).as_posix(), ast.parse(path.read_text())
+
+
+def test_observations_are_built_only_by_the_helper():
+    """``Observation(`` is constructed in exactly one place,
+    ``session.observed``, whose reader falls back to an aggregation when
+    the optimizer prunes the observation. A hand-rolled gate fails here."""
+    import ast
+
+    sites = [
+        f"{name}:{node.lineno}"
+        for name, tree in _package_asts()
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and "Observation" in (getattr(node.func, "id", None), getattr(node.func, "attr", None))
+    ]
+    assert len(sites) == 1 and sites[0].startswith("session.py:"), (
+        "Observation() built outside session.observed:\n" + "\n".join(sites)
+    )
+
+
+def test_session_memos_go_through_session_store():
+    """No module memoizes per session by hand: ``id(...sparkContext)``
+    appears nowhere, and only ``session.py`` builds a key that holds a
+    SparkContext (the single ``session_store`` dict)."""
+    import ast
+
+    def mentions_context(node):
+        return any(
+            isinstance(n, ast.Attribute) and n.attr == "sparkContext" for n in ast.walk(node)
+        )
+
+    bad = []
+    for name, tree in _package_asts():
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "id", None) == "id"
+                and any(mentions_context(a) for a in node.args)
+            ):
+                bad.append(f"{name}:{node.lineno} id(...sparkContext) key")
+            elif name != "session.py" and isinstance(node, ast.Tuple) and any(
+                mentions_context(e) for e in node.elts
+            ):
+                bad.append(f"{name}:{node.lineno} tuple key over sparkContext")
+    assert not bad, "hand-rolled session memo keys:\n" + "\n".join(bad)
 
 
 # --- bounded-collect lint (round 8, companion to the broadcast lint) --------

@@ -15,7 +15,7 @@ SF = "/root/testdata/sf0.001"
 
 def test_logreg_cache_ignores_unpinned_frames(spark):
     """Two content-equal but identity-distinct frames with the SAME
-    cache_key must not cross-hit: only the _LOGREG_FEATURE_STORE-pinned
+    cache_key must not cross-hit: only the session-store-pinned
     frame participates in the weight cache at all."""
     feats = Q._logreg_features(spark, SF)
     # a derived frame with identical content but different identity
@@ -30,9 +30,9 @@ def test_logreg_cache_ignores_unpinned_frames(spark):
         )
         assert len(Q._LOGREG_GD_CACHE) == 1, "pinned frame must cache"
         (ck,) = Q._LOGREG_GD_CACHE
-        # the key leads with the feature store's (sc_id, sf_dir) key,
+        # the key leads with the feature store's session-store key,
         # never a raw id(frame)
-        assert ck[0] == (id(spark.sparkContext), SF)
+        assert ck[0] == (Q._logreg_features.__wrapped__, spark.sparkContext, SF)
 
         # poison the cached value; an (incorrect) cross-hit would return it
         Q._LOGREG_GD_CACHE[ck] = [[9.9, 9.9, 9.9]]
