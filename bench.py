@@ -306,9 +306,10 @@ def main() -> None:
         for _ in range(2):
             t0 = time.perf_counter()
             q[name](spark, sf_dir).count()
-            rr.append(round(time.perf_counter() - t0, 3))
-        runs[name] = rr
-        timings[name] = min(rr)
+            rr.append(time.perf_counter() - t0)
+        # round only when recording, never before taking the min
+        runs[name] = [round(r, 3) for r in rr]
+        timings[name] = round(min(rr), 3)
         print(json.dumps({"query": name, "sec": timings[name]}), flush=True)
 
     total = round(sum(timings.values()), 3)

@@ -135,8 +135,8 @@ class ImportJob:
             per_source.append(step.counters)
             self.warnings.append(step.warnings)
             slog.info("merged: %s", step.counters)
-            for w in step.warnings:
-                slog.warning("%s", w)
+            for col, n in step.warnings.items():
+                slog.warning("%d warnings on column %s", n, col)
         results["sources"] = per_source
 
         results["postprocess"] = self.post_process()

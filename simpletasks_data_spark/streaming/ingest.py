@@ -236,10 +236,12 @@ def streaming_lsh_dedup(
     result identical to batch-mode LSH over the full corpus (the
     oracle), with no coordination between batches.
 
-    State layout under ``state_dir`` (parquet appends; at 100 TB both
-    stores live bucketed by (band, bucket) so a probe only shuffles the
-    batch's buckets): ``buckets/`` — one row per (band, bucket, id)
-    ever seen; ``matches/`` — oriented candidate observations.
+    State layout under ``state_dir`` (one ``epoch=N`` parquet partition
+    per micro-batch, written in overwrite mode so a retried epoch
+    replaces its own rows; at 100 TB both stores live bucketed by (band,
+    bucket) so a probe only shuffles the batch's buckets): ``buckets/`` —
+    one row per (band, bucket, id) ever seen; ``matches/`` — oriented
+    candidate observations.
 
     Returns (query_handle, read_result) where ``read_result()`` yields
     (id, matched_id, is_dup) for every ingested doc.
@@ -285,7 +287,11 @@ def streaming_lsh_dedup(
                 F.least(F.col("x._id"), F.col("y._id")).alias("matched_id"),
             )
         )
-        pairs.write.mode("append").parquet(matches_dir)
+        # matches are epoch-partitioned the same way, so a retried epoch
+        # overwrites its own rows instead of appending a second copy
+        pairs.write.mode("overwrite").parquet(
+            os.path.join(matches_dir, f"epoch={int(epoch_id)}")
+        )
 
     query = (
         doc_stream.writeStream.outputMode("update")

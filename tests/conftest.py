@@ -27,3 +27,26 @@ def pytest_ignore_collect(collection_path, config):
 def spark():
     s = get_spark(app_name="simpletasks-data-spark-tests", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture
+def cc_paths(monkeypatch):
+    """``for _ in cc_paths(): ...`` runs a connected-components check
+    under both paths: first the driver-side union-find (graphs at or
+    under ``LOCAL_CC_MAX_EDGES``), then the distributed loops (cap
+    monkeypatched to 0). Asserts that each pass took the path it names."""
+    from simpletasks_data_spark.operators import graph
+
+    calls = []
+    local = graph._local_components
+    monkeypatch.setattr(graph, "_local_components", lambda e: calls.append(1) or local(e))
+
+    def paths():
+        yield "local"
+        assert calls, "no connected-components call took the local path"
+        calls.clear()
+        monkeypatch.setattr(graph, "LOCAL_CC_MAX_EDGES", 0)
+        yield "distributed"
+        assert not calls, "a connected-components call took the local path"
+
+    return paths

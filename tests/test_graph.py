@@ -13,34 +13,38 @@ def _cc(spark, pairs):
     return {r.id: r.component for r in out.collect()}
 
 
-def test_cc_two_components_and_star(spark):
-    got = _cc(spark, [(1, 2), (2, 3), (10, 11), (10, 12), (10, 13)])
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 13: 10}
+def test_cc_two_components_and_star(spark, cc_paths):
+    for _ in cc_paths():
+        got = _cc(spark, [(1, 2), (2, 3), (10, 11), (10, 12), (10, 13)])
+        assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 13: 10}
 
 
-def test_cc_long_chain_converges(spark):
+def test_cc_long_chain_converges(spark, cc_paths):
     # a 40-node path: path halving must collapse it well under max_iter
     pairs = [(i, i + 1) for i in range(40)]
-    got = _cc(spark, pairs)
-    assert set(got.values()) == {0}
-    assert len(got) == 41
+    for _ in cc_paths():
+        got = _cc(spark, pairs)
+        assert set(got.values()) == {0}
+        assert len(got) == 41
 
 
-def test_cc_order_independent(spark):
+def test_cc_order_independent(spark, cc_paths):
     # reversed pair orientation and shuffled input give the same labels
     pairs = [(5, 1), (2, 5), (9, 8), (3, 2)]
-    got = _cc(spark, pairs)
-    assert got == {1: 1, 2: 1, 3: 1, 5: 1, 8: 8, 9: 8}
+    for _ in cc_paths():
+        got = _cc(spark, pairs)
+        assert got == {1: 1, 2: 1, 3: 1, 5: 1, 8: 8, 9: 8}
 
 
-def test_dedup_clusters_canonical_and_sizes(spark):
+def test_dedup_clusters_canonical_and_sizes(spark, cc_paths):
     df = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "id_a bigint, id_b bigint")
-    out = dedup_clusters(df).collect()
-    by_doc = {r.doc_id: r for r in out}
-    assert by_doc[1].is_canonical and by_doc[7].is_canonical
-    assert not by_doc[2].is_canonical and not by_doc[8].is_canonical
-    assert by_doc[3].cluster_size == 3 and by_doc[8].cluster_size == 2
-    assert all(r.cluster_id == min(1, 2, 3) for r in out if r.doc_id in (1, 2, 3))
+    for _ in cc_paths():
+        out = dedup_clusters(df).collect()
+        by_doc = {r.doc_id: r for r in out}
+        assert by_doc[1].is_canonical and by_doc[7].is_canonical
+        assert not by_doc[2].is_canonical and not by_doc[8].is_canonical
+        assert by_doc[3].cluster_size == 3 and by_doc[8].cluster_size == 2
+        assert all(r.cluster_id == min(1, 2, 3) for r in out if r.doc_id in (1, 2, 3))
 
 
 def test_incremental_minhash_matches(spark):
@@ -76,36 +80,40 @@ def _cc_big(spark, pairs):
     return {r.id: r.component for r in out.collect()}
 
 
-def test_bigstar_two_components_and_star(spark):
-    got = _cc_big(spark, [(1, 2), (2, 3), (10, 11), (10, 12), (10, 13)])
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 13: 10}
+def test_bigstar_two_components_and_star(spark, cc_paths):
+    for _ in cc_paths():
+        got = _cc_big(spark, [(1, 2), (2, 3), (10, 11), (10, 12), (10, 13)])
+        assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 13: 10}
 
 
-def test_bigstar_long_chain(spark):
+def test_bigstar_long_chain(spark, cc_paths):
     # the adversarial shape for label propagation: a 60-node path
     pairs = [(i, i + 1) for i in range(60)]
-    got = _cc_big(spark, pairs)
-    assert set(got.values()) == {0}
-    assert len(got) == 61
+    for _ in cc_paths():
+        got = _cc_big(spark, pairs)
+        assert set(got.values()) == {0}
+        assert len(got) == 61
 
 
-def test_bigstar_matches_label_prop_random(spark):
+def test_bigstar_matches_label_prop_random(spark, cc_paths):
     import random
 
     rng = random.Random(7)
     pairs = [(rng.randrange(60), rng.randrange(60)) for _ in range(50)]
     pairs = [(a, b) for a, b in pairs if a != b]
-    lp = _cc(spark, pairs)
-    bs = _cc_big(spark, pairs)
-    assert lp == bs
+    for _ in cc_paths():
+        lp = _cc(spark, pairs)
+        bs = _cc_big(spark, pairs)
+        assert lp == bs
 
 
-def test_dedup_clusters_bigstar_algorithm(spark):
+def test_dedup_clusters_bigstar_algorithm(spark, cc_paths):
     from simpletasks_data_spark.operators.graph import dedup_clusters
 
     df = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "id_a bigint, id_b bigint")
-    out = {r.doc_id: r for r in dedup_clusters(df, algorithm="bigstar").collect()}
-    assert out[1].is_canonical and out[3].cluster_size == 3 and out[8].cluster_id == 7
+    for _ in cc_paths():
+        out = {r.doc_id: r for r in dedup_clusters(df, algorithm="bigstar").collect()}
+        assert out[1].is_canonical and out[3].cluster_size == 3 and out[8].cluster_id == 7
 
 
 def test_kcore_path_graph_truncation_warns_and_fixpoint_loops(spark):
@@ -168,3 +176,59 @@ def test_sssp_bounded_weighted_path(spark):
     assert d2 == {1: 0, 2: 5, 3: 10}
     d1 = {r["node"]: r["dist"] for r in sssp_bounded(edges, seeds, max_hops=1).collect()}
     assert d1 == {1: 0, 2: 5, 3: 20}
+
+
+def _labels(fn, df):
+    return {r.id: r.component for r in fn(df, "a", "b").collect()}
+
+
+def test_cc_local_path_matches_distributed_hypothesis(spark):
+    """The driver-side union-find and both distributed loops agree on
+    random graphs mixing random edges, chains, stars, self-loops, and
+    duplicate and reversed edges (label propagation keeps self-loop
+    nodes; big-star drops them — each path must match its own loop)."""
+    import pytest
+    from hypothesis import HealthCheck, given, settings, strategies as st
+
+    from simpletasks_data_spark.operators import graph
+
+    @st.composite
+    def graphs(draw):
+        ids = st.integers(0, 40)
+        edges = draw(st.lists(st.tuples(ids, ids), min_size=1, max_size=25))
+        for start, length in draw(st.lists(st.tuples(st.integers(100, 150), st.integers(1, 20)), max_size=2)):
+            edges += [(start + i, start + i + 1) for i in range(length)]
+        for hub, k in draw(st.lists(st.tuples(st.integers(200, 220), st.integers(1, 8)), max_size=2)):
+            edges += [(hub, 1000 + 10 * hub + j) for j in range(k)]
+        edges += [(v, u) for u, v in draw(st.lists(st.sampled_from(edges), max_size=8))]
+        edges += draw(st.lists(st.sampled_from(edges), max_size=8))
+        edges += [(i, i) for i in draw(st.lists(st.integers(0, 60), max_size=3))]
+        return draw(st.permutations(edges))
+
+    @settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
+    @given(graphs())
+    def check(edges):
+        df = spark.createDataFrame(edges, "a long, b long")
+        for fn in (graph.connected_components, graph.connected_components_bigstar):
+            local = _labels(fn, df)
+            with pytest.MonkeyPatch.context() as m:
+                m.setattr(graph, "LOCAL_CC_MAX_EDGES", 0)
+                assert _labels(fn, df) == local
+
+    check()
+
+
+def test_cc_null_endpoint_takes_distributed_path(spark, monkeypatch):
+    """A NULL endpoint shuts the local gate: both algorithms return the
+    rows their distributed loops always returned (label propagation
+    labels the NULL node; big-star drops the NULL edge)."""
+    from simpletasks_data_spark.operators import graph
+
+    def local(edges):
+        raise AssertionError("a NULL endpoint took the local path")
+
+    monkeypatch.setattr(graph, "_local_components", local)
+    df = spark.createDataFrame([(1, None), (1, 2), (3, 4)], "a bigint, b bigint")
+    assert _labels(graph.connected_components, df) == {1: 1, 2: 1, 3: 3, 4: 3, None: 1}
+    assert _labels(graph.connected_components_bigstar, df) == {1: 1, 2: 1, 3: 3, 4: 3}
+

@@ -383,9 +383,12 @@ def test_update_error_keeps_old_value(spark):
     assert res["updated"] == 1
 
 
-def test_warn_counters(spark):
+def test_warn_counters(spark, caplog):
     """warn_on_error / warn_if_empty are surfaced as per-source warn counts
-    (the reference only logs these, importtask.py:262-284)."""
+    (the reference only logs these, importtask.py:262-284), and each count
+    is logged with its column on the source's child logger."""
+    import logging
+
     target_df = spark.createDataFrame([(1, "A", None, None, None, None, None)], TARGET_SCHEMA)
     target = TargetTable(schema=TARGET_SCHEMA, df=target_df, primary_keys=("id",), lengths=LENGTHS)
 
@@ -407,8 +410,11 @@ def test_warn_counters(spark):
         ["2", "ok", "3"],    # clean create
     ]
     job = ImportJob(spark, target, sources=[GeneratorSource(rows, M(), name="s")], dryrun=True)
-    job.run()
+    with caplog.at_level(logging.WARNING, logger=job.logger.name):
+        job.run()
     assert job.warnings == [{"col1": 1, "col5": 1}]
+    logged = sorted(r.getMessage() for r in caplog.records if r.name == job.logger.name + ".s")
+    assert logged == ["1 warnings on column col1", "1 warnings on column col5"]
 
 
 def test_history_per_source_spec(spark):

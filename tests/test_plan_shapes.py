@@ -149,6 +149,21 @@ def test_signature_store_reused_across_dedup_family(spark):
     assert len(signature_entries()) == 1
 
 
+def test_dedup_clusters_warm_call_reuses_generated_code(spark):
+    """A ``dedup_clusters`` call uses more generated classes than Spark's
+    default codegen cache holds (100); the session's larger cache must
+    let later calls reuse every class the first one compiled. Two warm
+    calls are counted: with 100 entries which classes survive varies
+    from run to run, and each warm call recompiled 20-35."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    run = lambda: Q.queries()["dedup_clusters"](spark, SF).collect()  # noqa: E731
+    run()
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    run()
+    run()
+    assert metrics.METRIC_COMPILATION_TIME().getCount() - before <= 5
+
+
 def test_passage_dedupe_two_exchanges(spark):
     """Ownership via a window over ONE seg_hash exchange + the final
     per-doc agg — a groupBy+join-back would re-shuffle the segment frame
@@ -613,7 +628,7 @@ def test_session_memos_go_through_session_store():
 
 
 # --- bounded-collect lint (round 8, companion to the broadcast lint) --------
-# A .collect()/.toPandas()/.first() in package code pulls rows onto the
+# A .collect()/.toPandas()/.toArrow()/.first() in package code pulls rows onto the
 # driver: bounded-size pulls (1-row aggs, k centroids, per-partition
 # boundary metadata, runtime-gated exports) are legitimate kernels; an
 # unbounded pull is a driver OOM and a non-distributed operator. Every
@@ -644,7 +659,7 @@ def test_driver_collects_are_declared_bounded():
             if (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
-                and node.func.attr in ("collect", "toPandas", "first", "head")
+                and node.func.attr in ("collect", "toPandas", "toArrow", "first", "head")
                 and not node.args
                 and not node.keywords
             ):

@@ -553,6 +553,53 @@ def test_streaming_lsh_dedup_order_independent(spark, tmp_path):
     assert results[0][2] == (None, False)
 
 
+def test_streaming_lsh_dedup_retried_epoch_writes_no_duplicates(spark, tmp_path):
+    """A micro-batch whose offsets were logged but whose commit was not is
+    delivered again, with the same epoch id, when the query restarts. The
+    state it leaves (bucket and match rows) must equal one delivery."""
+    import os
+
+    from simpletasks_data_spark.streaming import streaming_lsh_dedup
+
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog again and again"),
+        (2, "completely unrelated text about spark accumulators and shuffles"),
+        (900001, "the quick brown fox jumps over the lazy dog again and again"),
+    ]
+    docs = spark.createDataFrame(rows, "id long, text string")
+    src, state = str(tmp_path / "src"), str(tmp_path / "state")
+    # one file per row, in id order: the last epoch holds the match
+    docs.repartitionByRange(3, "id").write.parquet(src)
+
+    def deliver():
+        stream = spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(src)
+        q, read_result = streaming_lsh_dedup(stream, state)
+        h = q.start()
+        try:
+            h.processAllAvailable()
+        finally:
+            h.stop()
+        return read_result
+
+    def state_rows():
+        return {
+            d: sorted(tuple(r) for r in spark.read.parquet(os.path.join(state, d)).collect())
+            for d in ("buckets", "matches")
+        }
+
+    read_result = deliver()
+    once = state_rows()
+    assert once["matches"]
+    commits = os.path.join(state, "ck", "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for f in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+    deliver()
+    assert state_rows() == once
+    assert {r["id"]: r["matched_id"] for r in read_result().collect()} == {1: None, 2: None, 900001: 1}
+
+
 def test_k_anonymity_known_classes(spark):
     """4 rows in classes of sizes {3, 1}: at k=2 only the singleton is
     at risk; at k=5 everything is."""
