@@ -3,8 +3,8 @@ under both join strategies (round-11 evidence): the returned frame of an
 iterative operator is just the final checkpoint scan, so the plan diff
 that matters — SortMergeJoin of the edge frame vs gated node-side
 broadcast — lives in the ROUND plan. This probe builds one pagerank
-round with the gate forced off (broadcast_nodes_limit=0) and on
-(default) and writes both explains to plans/r11/.
+round with the gate forced off (SMJ) and on (node-side broadcast
+under ``graph.BROADCAST_NODES_MAX``) and writes both explains to plans/r11/.
 
 Usage: python scripts/probe_round_plans.py
 """

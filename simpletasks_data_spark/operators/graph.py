@@ -6,109 +6,99 @@ comparison); this is part of the training-data extension surface, where
 near-dup pairs must be folded into clusters so each cluster keeps exactly
 one canonical document.
 
-Algorithm: iterative min-label propagation with path-halving.
-
-- ``lab(u)`` starts as ``u``; each round every node takes the min of its
-  own label and its neighbors' labels (one shuffle join + one hash agg),
-  then a pointer-jump round replaces ``lab(u)`` with ``lab(lab(u))``
-  (path halving — a second self-join), which makes long chains collapse
-  in O(log diameter) rounds instead of O(diameter).
-- Convergence is detected with an exact changed-label count folded into
-  the SAME action that materializes the round's labels (``Observation``
-  on the per-round ``localCheckpoint``), so each round costs exactly one
-  job; the loop stops at ``changed == 0``.
-- Every such gate (here and in pagerank, k_core, bfs_reach, sssp_bounded)
-  goes through ``session.observed``. In classic PySpark (checked on
-  4.1.2), an observation the optimizer pruned makes ``.get`` raise
-  ``Py4JJavaError`` at once (an assertion in ``PythonSQLUtils.toPyRow``);
-  it does not hang. The helper then falls back to aggregating the same
-  metrics over the un-observed frame.
-- Each round checkpoints: iterative lineage otherwise grows a plan per
-  round and re-executes the whole history on every action. On a cluster
-  this would be ``persist(MEMORY_AND_DISK)`` + periodic reliable
-  checkpoints.
+Input contract: each edge is canonicalized to ``(least, greatest)``, and
+edges with a NULL endpoint and self-loops are dropped, in the projection
+that feeds the first eager checkpoint. That checkpoint carries the edge
+count as an Observation, which picks one of two paths.
 
 Local gate: a graph that fits on one machine needs no distributed rounds
 (PAPERS.md, "Approximation Algorithms for Large Scale Data Analysis",
-PODS 2021). Both CC entry points start with an eager checkpoint of the
-pair frame; it carries two observed counts, edges and edges with a NULL
-endpoint. With no NULL endpoint and at most ``LOCAL_CC_MAX_EDGES`` edges,
-the edges are pulled to the driver (one job) and folded by union-find
-with the min id as root — the same labels either loop converges to —
-into a one-partition frame built from an Arrow table. Otherwise the
-loops below run unchanged (a NULL endpoint keeps each loop's own NULL
-semantics). On a verified dedup graph this replaces every CC round with
-one collect: a warm ``dedup_corpus`` benchmark call goes from 17 to 8
-jobs inside ``dedup_clusters``. The local path always reaches the fixed
-point; ``max_iter`` bounds only the distributed loops.
+PODS 2021). At most ``LOCAL_CC_MAX_EDGES`` edges are pulled to the
+driver (one job) and folded by union-find with the min id as root — the
+labels big-star converges to — into a one-partition frame built from an
+Arrow table. On a verified dedup graph this replaces every CC round with
+one collect; every CC call in the catalog except
+``graph_percolation_supplier`` (397k edges at sf0.1) stays under the cap.
+
+Above the cap, alternating large-star / small-star (Kiveris et al.,
+"Connected Components in MapReduce and Beyond", SoCC'14): the round
+count does not depend on graph diameter. Each round is two window mins
+and one explode, composed into a single plan that ends in canonicalize +
+distinct and is checkpointed (flat lineage) with an Observation of the
+edge count and an order-independent checksum; convergence is "round
+output identical two rounds running", read from that observation, so a
+round costs one action and no separate count. ``CC_MAX_ROUNDS`` rounds
+without convergence raise ``ConvergenceError``.
+
+Every Observation gate (here and in pagerank, k_core, bfs_reach,
+sssp_bounded) goes through ``session.observed``. In classic PySpark
+(checked on 4.1.2), an observation the optimizer pruned makes ``.get``
+raise ``Py4JJavaError`` at once (an assertion in
+``PythonSQLUtils.toPyRow``); it does not hang. The helper then falls back
+to aggregating the same metrics over the un-observed frame.
 
 The cap comes from ``scripts/cc_crossover.py`` (``connected_components``
-on generated graphs, ``local[4]`` on a shared 4-core VM, wall / CPU
-seconds of driver + JVM, one warm run each):
+on generated graphs with the gate forced open and shut, ``local[4]`` on a
+shared 4-core VM; wall s / CPU s of driver + JVM / Spark jobs, one warm
+run each; ``stars`` are 5-node stars, ``star`` is one giant star):
 
-    edges   shape  local          distributed
-    10k     star   0.63 / 2.15    2.05 / 6.51
-    10k     chain  0.96 / 2.11    6.58 / 16.96
-    100k    star   0.77 / 1.52    1.20 / 3.22
-    100k    chain  0.75 / 1.07    11.11 / 24.33
-    300k    star   2.56 / 6.47    2.57 / 7.53
-    300k    chain  1.72 / 2.79    20.58 / 57.15
-    1M      star   6.08 / 11.70   3.67 / 11.26
-    1M      chain  6.94 / 9.54    62.29 / 179.46
+    edges  shape  local (union-find)   distributed (big-star)
+    10k    star   0.52 / 1.80 / 3      2.26 / 6.89 / 11
+    10k    stars  0.38 / 1.15 / 3      1.80 / 5.13 / 11
+    10k    chain  0.36 / 1.00 / 3      7.67 / 14.61 / 63
+    100k   star   0.72 / 1.39 / 3      1.99 / 3.13 / 11
+    100k   stars  0.81 / 1.03 / 3      2.24 / 3.71 / 11
+    100k   chain  0.89 / 1.19 / 3      13.62 / 19.77 / 75
+    300k   star   1.49 / 2.35 / 3      3.49 / 6.30 / 11
+    300k   stars  1.91 / 2.55 / 3      2.86 / 6.74 / 11
+    300k   chain  2.10 / 2.71 / 3      23.92 / 45.91 / 83
+    1M     star   5.60 / 8.09 / 3      6.48 / 18.33 / 11
+    1M     stars  8.08 / 12.32 / 3     4.62 / 13.92 / 11
+    1M     chain  6.15 / 9.78 / 3      38.66 / 121.28 / 87
 
-Chains favour the driver at every size (their distributed cost grows
-with the O(log diameter) rounds); stars cross over near 300k edges. The
-cap sits below that crossover, and also bounds what one collect pulls
+Chains favour the driver at every size: big-star needs about log2 n + 1
+rounds on a chain (15 at 10k edges, 21 at 1M), so ``CC_MAX_ROUNDS``
+leaves room for chains far longer than any dedup graph. Stars of either
+kind converge in two rounds and draw level with the driver near 1M
+edges; the cap sits below that, and also bounds what one collect pulls
 into the driver (two ids per edge).
 
-Scale notes (100 TB): dedup graphs are overwhelmingly tiny stars and
-short chains — label propagation with path halving converges in a
-handful of rounds, each a pair of shuffles on the (contracting) label
-frame. For adversarially long paths the alternating large-star /
-small-star algorithm (Kiveris et al., "Connected Components in MapReduce
-and Beyond", SoCC'14) bounds rounds by O(log² n) independent of
-diameter; the loop below is structured so that swap is a drop-in
-(replace the propagate step, keep the checkpoint/observe harness). A
-hot node (one document near-duplicating millions) concentrates its
-star's edges on one reducer — pre-contract such stars with an exact
-content-hash dedup pass (byte-identical copies never need the graph).
+The one shape big-star runs slower than the retired min-label
+propagation loop is the single giant star: its hub puts every edge in
+one window partition, where min-label propagation settled in its first
+round (1M edges, one warm run each before removal: 2.42 / 7.28 s against
+big-star's 6.05 / 15.7 s). No catalog or benchmark graph has that
+shape; dedup graphs are small stars and short chains.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Optional, Tuple
+from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import observed
 
-__all__ = ["connected_components", "connected_components_bigstar", "dedup_clusters", "pagerank", "triangle_count", "triangle_count_degree_oriented", "label_propagation", "random_walks", "walk_cooccurrence"]
+__all__ = ["ConvergenceError", "connected_components", "dedup_clusters", "pagerank", "triangle_count", "label_propagation", "random_walks", "walk_cooccurrence"]
 
 LOCAL_CC_MAX_EDGES = 200_000  # see "Local gate" above
+CC_MAX_ROUNDS = 50  # big-star rounds before ConvergenceError
+# node-side broadcast gate of the iterative operators: ~16 bytes a node
+# row bounds the built relation to ~32 MB, well inside broadcast range
+BROADCAST_NODES_MAX = 2_000_000
+PAGERANK_CHECKPOINT_EVERY = 3  # rounds between lazy score checkpoints
 
 
-def _gated_edges(pairs: DataFrame, src: str, dst: str) -> Tuple[DataFrame, Callable[[], bool]]:
-    """``pairs`` as ``(u, v)`` with the local gate's two counts observed
-    on it, and a reader (valid once the frame's checkpoint has run) that
-    says whether the graph goes to the driver."""
-    uv, read = observed(
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")),
-        F.count(F.lit(1)).alias("n_edges"),
-        F.count_if(F.col("u").isNull() | F.col("v").isNull()).alias("n_null"),
-    )
-
-    def local() -> bool:
-        gate = read()
-        return gate["n_null"] == 0 and gate["n_edges"] <= LOCAL_CC_MAX_EDGES
-
-    return uv, local
+class ConvergenceError(RuntimeError):
+    """Connected components used up ``CC_MAX_ROUNDS`` big-star rounds
+    without reaching its fixed point."""
 
 
 def _local_components(edges: DataFrame) -> DataFrame:
     """Union-find over the ``(u, v)`` rows of ``edges`` on the driver:
     ``(id, component)`` for every endpoint, ``component`` the min id of
-    its component (the fixed point both distributed loops converge to).
+    its component (the fixed point big-star converges to).
     Returned as ONE partition built from an Arrow table — a Python list
     would fork Python workers to serialize it, and more partitions would
     fan out every downstream stage (and write one file each)."""
@@ -143,157 +133,33 @@ def _local_components(edges: DataFrame) -> DataFrame:
     schema = edges.select(F.col("u").alias("id"), F.col("u").alias("component")).schema
     return edges.sparkSession.createDataFrame(out, schema).coalesce(1)
 
-
-def connected_components(
-    pairs: DataFrame,
-    src: str,
-    dst: str,
-    max_iter: int = 25,
-) -> DataFrame:
-    """Component labels for every node that appears in ``pairs``:
-    ``(id, component)`` where ``component`` is the min node id reachable
-    through the undirected pair graph. Deterministic; order-independent."""
-    # Materialize the pair frame BEFORE symmetrizing: a union references
-    # its input twice, so checkpointing the union instead would run the
-    # (expensive) upstream pair pipeline once per branch in the same job.
-    # The symmetric form is a narrow double-read of the checkpointed rows.
-    e, local = _gated_edges(pairs, src, dst)
-    e = e.localCheckpoint(eager=True)
-    edges = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    if local():
-        # src and dst may differ in type (int vs long): pull the type the
-        # union widens both to, which the loops below would label with
-        common = edges.schema["u"].dataType
-        return _local_components(e.select(*(F.col(c).cast(common).alias(c) for c in ("u", "v"))))
-    # Fused init: the node-set distinct would cost the same shuffle as a
-    # min aggregation, so fold propagation round 1 into it — lab0(u) =
-    # min(u, min neighbor). Stars and isolated pairs (the overwhelming
-    # shape of dedup graphs) are DONE after this init; the loop below then
-    # only confirms convergence (one round) instead of propagating twice.
-    # The node count for the broadcast gate rides the init's eager
-    # checkpoint as an Observation (r12: the separate lab.count() job is
-    # gone — one job per CC call saved, the kmeans-gate pattern).
-    lab, n_nodes = observed(
-        edges.groupBy(F.col("u").alias("id"))
-        .agg(F.min("v").alias("_mn"))
-        .select("id", F.least(F.col("id"), F.col("_mn")).alias("lab")),
-        F.count(F.lit(1)).alias("n"),
-    )
-    lab = lab.localCheckpoint(eager=True)
-    # Gated node-side broadcast (guide-of-record §3.1, the pagerank
-    # pattern): the label frame is NODE-bounded, the edge frame is not;
-    # the checkpointed frames carry no stats so Spark would sort-merge
-    # and re-shuffle the edge frame every round. Deterministic metrics
-    # at sf0.1 (scripts/ab_metrics.py, percolation = 3 CC runs):
-    # shuffle 15.0 -> 1.8 MB, executor CPU 44 -> 32 s. Wall-clock A/B
-    # first suggested a regression — that was host-throughput noise
-    # (2x control swings); decide iterative-join strategy from plan
-    # metrics, not wall seconds, on this box.
-    _bcast_nodes = int(n_nodes()["n"]) <= 2_000_000
-    for _ in range(max_iter):
-        # min over self + neighbor labels (one shuffle on id). The self
-        # rows carry a marker so the SAME aggregation also yields the old
-        # label — the convergence check then rides the round's observation
-        # instead of costing a third join.
-        _lab_u = lab.withColumnRenamed("id", "u")
-        if _bcast_nodes:
-            _lab_u = F.broadcast(_lab_u)  # b: gated
-        nbr = (
-            edges.join(_lab_u, "u")
-            .select(F.col("v").alias("id"), "lab", F.lit(False).alias("_self"))
-        )
-        new = (
-            lab.withColumn("_self", F.lit(True))
-            .unionByName(nbr)
-            .groupBy("id")
-            .agg(
-                F.min("lab").alias("lab"),
-                F.max(F.when(F.col("_self"), F.col("lab"))).alias("_old"),
-            )
-        )
-        # path halving: lab(u) <- lab(lab(u)); labels are node ids, so the
-        # label frame itself is the pointer table
-        _ptr = lab.select(F.col("id").alias("lab"), F.col("lab").alias("_ll"))
-        if _bcast_nodes:
-            _ptr = F.broadcast(_ptr)  # b: gated
-        new = (
-            new.join(
-                _ptr,
-                "lab",
-                "left",
-            )
-            .select(
-                "id",
-                F.least(F.col("lab"), F.coalesce(F.col("_ll"), F.col("lab"))).alias("lab"),
-                "_old",
-            )
-        )
-        cmp, changed = observed(new, F.count_if(F.col("lab") != F.col("_old")).alias("changed"))
-        lab = cmp.select("id", "lab").localCheckpoint(eager=True)
-        if int(changed()["changed"]) == 0:
-            break
-    return lab.select("id", F.col("lab").alias("component"))
-
-
-def connected_components_bigstar(
-    pairs: DataFrame,
-    src: str,
-    dst: str,
-    max_iter: int = 50,
-) -> DataFrame:
-    """Alternating large-star / small-star connected components (Kiveris
-    et al., "Connected Components in MapReduce and Beyond", SoCC'14):
-    the same ``(id, component)`` contract as :func:`connected_components`,
-    but round count is O(log² n) INDEPENDENT of graph diameter — the
-    variant to reach for on adversarial chain-shaped graphs, where plain
-    label propagation (even with path halving) degrades to O(log diameter)
-    rounds over a frame that stays large.
-
-    Per round exactly ONE job: both phases are window passes (min over
-    the neighbor partition — the same key the old groupBy+self-join pair
-    shuffled twice), composed into a single plan that ends in
-    canonicalize + distinct, checkpointed with an Observation carrying
-    the edge count and an order-independent checksum — convergence is
-    "small-star output identical two rounds running", detected from the
-    observation, costing no extra action. (r11: the groupBy+join form
-    cost ~5 exchanges + 2 actions per round; the window form is
-    set-identical — min is duplicate-insensitive, and the end-of-round
-    distinct subsumes the intermediate one — at 3 exchanges + 1 action.)
-    At the fixed point the edge set is a star forest rooted at each
-    component's min id.
-
-    - large-star: every node links its LARGER neighbors to its smallest
-      known node (min of self + neighborhood) — long chains fold toward
-      small ids without ever increasing the edge count beyond 2|E|.
-    - small-star: every node links its smaller-or-equal neighbors (plus
-      itself) to their min — consolidating the partial stars.
-    """
+def connected_components(pairs: DataFrame, src: str, dst: str) -> DataFrame:
+    """Component labels for every endpoint of the non-loop, non-NULL
+    edges in ``pairs``: ``(id, component)`` where ``component`` is the
+    min node id reachable through the undirected pair graph. A node
+    seen only on a self-loop or next to a NULL gets no row.
+    Deterministic; order-independent. Raises ``ConvergenceError`` when
+    big-star has not converged within ``CC_MAX_ROUNDS`` rounds."""
     from pyspark.sql import Window
 
-    raw, local = _gated_edges(pairs, src, dst)
-    e = (
-        raw.where(F.col("u") != F.col("v"))
-        .select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+    # Materialize the edges BEFORE symmetrizing: a union references its
+    # input twice, so checkpointing the union instead would run the
+    # (expensive) upstream pair pipeline once per branch in the same job.
+    # `!=` is NULL for a NULL endpoint, so one filter drops those edges
+    # and self-loops alike. No distinct: union-find ignores duplicate
+    # edges, and every big-star round ends in one.
+    e, n_edges = observed(
+        pairs.where(F.col(src) != F.col(dst)).select(
+            F.least(src, dst).alias("u"), F.greatest(src, dst).alias("v")
+        ),
+        F.count(F.lit(1)).alias("n"),
     )
-    if local():
+    e = e.localCheckpoint(eager=True)
+    if n_edges()["n"] <= LOCAL_CC_MAX_EDGES:
         return _local_components(e)
 
-    def _checkpoint_observed(edges: DataFrame):
-        out, read = observed(
-            edges,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(F.xxhash64("u", "v")), F.lit(0)).alias("chk"),
-        )
-        out = out.localCheckpoint(eager=True)
-        row = read()
-        return out, (row["n"], row["chk"])
-
     prev_sig = None
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         # ---- large-star (window form) ----
         # min(self + neighborhood) per node u is a window min over the
         # symmetrized frame; rows with v > u emit (big=v, small=least(u, mn)).
@@ -309,11 +175,10 @@ def connected_components_bigstar(
             )
         )
         # ---- small-star (window form) ----
-        # ls rows are (u=big, v=small): exactly the old `smaller` frame.
-        # Every row links its small end to the group min; the rows that
-        # ACHIEVE the min additionally emit the (big, min) self link —
-        # duplicates (from skipping the intermediate distinct) collapse in
-        # the end-of-round distinct and cannot move a min.
+        # ls rows are (u=big, v=small). Every row links its small end to
+        # the group min; the rows that ACHIEVE the min additionally emit
+        # the (big, min) self link — duplicates collapse in the
+        # end-of-round distinct and cannot move a min.
         ann = ls.withColumn("_mn", F.min("v").over(Window.partitionBy("u")))
         ss = ann.select(
             F.explode(
@@ -328,15 +193,21 @@ def connected_components_bigstar(
                 )
             ).alias("_e")
         ).select(F.col("_e.x").alias("a"), F.col("_e.y").alias("b"))
-        e_ss = (
+        e, sig = observed(
             ss.where(F.col("a") != F.col("b"))
             .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-            .distinct()
+            .distinct(),
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.sum(F.xxhash64("u", "v")), F.lit(0)).alias("chk"),
         )
-        e, sig = _checkpoint_observed(e_ss)
-        if sig == prev_sig:
+        e = e.localCheckpoint(eager=True)
+        if (s := sig()) == prev_sig:
             break
-        prev_sig = sig
+        prev_sig = s
+    else:
+        raise ConvergenceError(
+            f"connected_components: big-star not converged after CC_MAX_ROUNDS={CC_MAX_ROUNDS} rounds"
+        )
 
     # Fixed point: stars (root=u since canonical u<v). Children label to
     # their root; roots label to themselves.
@@ -347,23 +218,12 @@ def connected_components_bigstar(
     return children.unionByName(roots)
 
 
-def dedup_clusters(
-    pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 25,
-    algorithm: str = "label_prop",
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame, src: str = "id_a", dst: str = "id_b") -> DataFrame:
     """Cluster the verified near-dup pairs: ``(doc_id, cluster_id,
     cluster_size, is_canonical)``. The canonical doc per cluster is the
     min id (== the cluster label); everything else is a removal
-    candidate. One extra hash agg over the (tiny) label frame.
-    ``algorithm``: ``label_prop`` (default; fastest on star-heavy dedup
-    graphs) or ``bigstar`` (round count independent of diameter)."""
-    cc_fn = (
-        connected_components_bigstar if algorithm == "bigstar" else connected_components
-    )
-    cc = cc_fn(pairs, src, dst, max_iter)
+    candidate. One extra hash agg over the (tiny) label frame."""
+    cc = connected_components(pairs, src, dst)
     sizes = cc.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
         cc.join(sizes, "component")
@@ -385,8 +245,6 @@ def pagerank(
     round_at: int = 8,
     reset_ids: Optional[DataFrame] = None,
     reset_id_col: str = "id",
-    checkpoint_interval: int = 3,
-    broadcast_nodes_limit: int = 2_000_000,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge frame: ``(id,
     score)`` after ``iterations`` synchronous rounds of
@@ -407,11 +265,11 @@ def pagerank(
 
     Scale shape per round: one join of the (checkpointed) score frame
     against the out-degree-annotated edges, one sum aggregation keyed by
-    dst, one left join back to the node set for sourceless nodes — the
-    same two-shuffle round as connected_components, with the edge frame
-    checkpointed once up front. Nodes with no in-edges settle at (1-d).
-    Dangling nodes (no out-edges) contribute nothing, matching the
-    simplified formulation (no dangling-mass redistribution).
+    dst, one left join back to the node set for sourceless nodes — two
+    shuffles a round, with the edge frame checkpointed once up front.
+    Nodes with no in-edges settle at (1-d). Dangling nodes (no
+    out-edges) contribute nothing, matching the simplified formulation
+    (no dangling-mass redistribution).
 
     ``reset_ids``: PERSONALIZED PageRank — the (1-d) reset mass lands
     only on the given seed nodes (unnormalized: 1.0 per seed, so the
@@ -451,13 +309,12 @@ def pagerank(
     # frame every round. While the node set is provably small (runtime
     # count against an explicit cap — the lint's `gated` class), hint
     # the node-sized side so the edge frame is never shuffled; larger
-    # graphs keep the SMJ path unchanged. ~16 bytes/row -> the cap
-    # bounds the built relation to ~32 MB, well inside broadcast range.
+    # graphs keep the SMJ path unchanged (cap: BROADCAST_NODES_MAX).
     # The gate count rides the eager checkpoint as an Observation (r12):
     # no dedicated count() job.
     nr, n_nodes = observed(nr, F.count(F.lit(1)).alias("n"))
     nr = nr.localCheckpoint(eager=True)
-    _bcast_nodes = int(n_nodes()["n"]) <= broadcast_nodes_limit
+    _bcast_nodes = int(n_nodes()["n"]) <= BROADCAST_NODES_MAX
     # p0 = 1.0 per (seed) node on the grid
     if reset_ids is None:
         scores = nr.select("id", F.lit(unit).cast("long").alias("_sn"))
@@ -500,50 +357,11 @@ def pagerank(
         # r11 eager-interval measurement (every-round 13.3s, every-3
         # 8.2s, never 9.8s) actually paid for; the eager jobs were pure
         # per-round fixed cost. Values identical either way.
-        if (it + 1) % checkpoint_interval == 0 or it == iterations - 1:
+        if (it + 1) % PAGERANK_CHECKPOINT_EVERY == 0 or it == iterations - 1:
             scores = scores.localCheckpoint(eager=False)
     return scores.select(
         "id", (F.col("_sn").cast("double") / F.lit(float(unit))).alias("score")
     )
-
-
-def triangle_count_degree_oriented(edges: DataFrame) -> DataFrame:
-    """``triangle_count`` with DEGREE orientation: edges are re-oriented
-    from the endpoint with smaller (degree, id) toward the larger, which
-    bounds every oriented out-degree by O(sqrt(|E|)) (a node of degree d
-    only points at neighbors of degree >= d, and there are at most
-    2|E|/d of those) — the worst-case guard for power-law graphs where
-    id-orientation can leave a hub with huge out-degree. Costs one
-    degree aggregation + two broadcast joins more than the id-oriented
-    form; identical output.
-    """
-    und = edges.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
-        edges.select(F.col("v").alias("a"), F.col("u").alias("b"))
-    )
-    deg = und.groupBy(F.col("a").alias("id")).agg(F.count(F.lit(1)).alias("d"))
-    da = deg.select(F.col("id").alias("u"), F.struct("d", "id").alias("ku"))
-    db = deg.select(F.col("id").alias("v"), F.struct("d", "id").alias("kv"))
-    keyed = edges.join(da, "u").join(db, "v")
-    oriented = keyed.select(
-        F.when(F.col("ku") < F.col("kv"), F.col("u")).otherwise(F.col("v")).alias("u"),
-        F.when(F.col("ku") < F.col("kv"), F.col("v")).otherwise(F.col("u")).alias("v"),
-    )
-    # the oriented relation is a DAG under the (degree, id) total order,
-    # so the same two-join enumeration counts each triangle once
-    e = oriented
-    e1, e2 = e.alias("e1"), e.alias("e2")
-    paths = e1.join(e2, F.col("e1.v") == F.col("e2.u")).select(
-        F.col("e1.u").alias("a"), F.col("e1.v").alias("b"), F.col("e2.v").alias("c")
-    )
-    tri = paths.join(
-        e.withColumnRenamed("u", "a").withColumnRenamed("v", "c"), ["a", "c"]
-    )
-    corners = (
-        tri.select(F.col("a").alias("id"))
-        .unionAll(tri.select(F.col("b").alias("id")))
-        .unionAll(tri.select(F.col("c").alias("id")))
-    )
-    return corners.groupBy("id").agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -609,10 +427,10 @@ def label_propagation(edges: DataFrame, iterations: int = 3) -> DataFrame:
     ).localCheckpoint(eager=False)
     nodes = und.select(F.col("src").alias("id")).distinct()
     labels = nodes.withColumn("community", F.col("id"))
-    # Gated node-side broadcast (the pagerank/CC pattern; labels are
+    # Gated node-side broadcast (the pagerank pattern; labels are
     # node-bounded, und is edge-sized). The count also materializes the
     # und checkpoint before the rounds reference it three times.
-    _bcast_nodes = nodes.count() <= 2_000_000
+    _bcast_nodes = nodes.count() <= BROADCAST_NODES_MAX
     for _ in range(iterations):
         _lab_src = labels.withColumnRenamed("id", "src")
         if _bcast_nodes:
@@ -893,7 +711,7 @@ def bfs_reach(edges: DataFrame, seeds: DataFrame, radius: int = 3) -> DataFrame:
         # frontier is (seed-cohort x reach)-bounded while the adjacency
         # is edge-sized. The frontier size rides each round's eager
         # checkpoint as an Observation (r12) — no per-round count() job.
-        _f = F.broadcast(frontier) if n_frontier <= 2_000_000 else frontier  # b: gated
+        _f = F.broadcast(frontier) if n_frontier <= BROADCAST_NODES_MAX else frontier  # b: gated
         nxt, n_next = observed(
             _f.join(und, _f["node"] == und["src"])
             .select("seed", F.col("dst").alias("node"))
@@ -950,12 +768,12 @@ def sssp_bounded(
     dist = dist.localCheckpoint(eager=True)
     n_dist = int(n_read()["n"])
     for _ in range(max_hops):
-        # Gated frontier-side broadcast (the pagerank/CC pattern): the
+        # Gated frontier-side broadcast (the pagerank pattern): the
         # distance frame is (seed-cohort x reached)-bounded, the
         # adjacency is edge-sized. The frame size rides each round's
         # eager checkpoint as an Observation (r12) — no per-round
         # count() job.
-        _d = F.broadcast(dist) if n_dist <= 2_000_000 else dist  # b: gated
+        _d = F.broadcast(dist) if n_dist <= BROADCAST_NODES_MAX else dist  # b: gated
         relaxed = (
             _d.join(und, _d["node"] == und["a"])
             .select("src_id", F.col("b").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
@@ -1066,7 +884,7 @@ def hyperball_neighborhood(
             ]
         ).alias("_regs"),
     ).localCheckpoint(eager=False)
-    # Gated node-side broadcast (the pagerank/CC pattern): the register
+    # Gated node-side broadcast (the pagerank pattern): the register
     # frame is node-bounded; the count is ALSO the round-0 materializer
     # (it pulls the lazy regs and und checkpoints through in one job).
     # Gate on estimated BYTES (rows * m * 4 <= 128 MB), not a fixed row

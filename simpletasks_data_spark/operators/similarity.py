@@ -895,11 +895,10 @@ def dbscan_grid_2d(
     Semantics (deterministic DBSCAN variant):
     - core: >= ``min_pts`` points (incl. itself) within ``eps``;
     - clusters: connected components of the core-core eps-graph
-      (operators/graph.connected_components_bigstar — a spatial
-      eps-graph is exactly the long-diameter chain shape where plain
-      label propagation pays O(diameter) rounds; big-star is O(log^2 n)
-      rounds regardless, measured 13.5 s -> 4.8 s on the sf0.1
-      component), cluster id = min core id in the component;
+      (operators/graph.connected_components: driver-side union-find
+      under its edge cap, else big-star, whose round count does not
+      grow with the long diameter of a spatial eps-graph), cluster id =
+      min core id in the component;
     - border: non-core within eps of >= 1 core, assigned the MIN cluster
       id among its core neighbors (classic DBSCAN is scan-order-dependent
       here; the min rule makes it order-free);
@@ -912,7 +911,7 @@ def dbscan_grid_2d(
 
     Returns ``(id_col, cluster_id: long, role: core|border|noise)``.
     """
-    from .graph import connected_components_bigstar
+    from .graph import connected_components
 
     eps2 = eps * eps
     pts = points.select(
@@ -969,7 +968,7 @@ def dbscan_grid_2d(
         .join(core.select(F.col("_id").alias("_ib")), "_ib")
         .select("_ia", "_ib")
     )
-    cc = connected_components_bigstar(core_edges, "_ia", "_ib")
+    cc = connected_components(core_edges, "_ia", "_ib")
     # singleton cores (no core neighbor) never enter the edge frame
     clusters = (
         core.join(cc, core["_id"] == cc["id"], "left")

@@ -2178,9 +2178,9 @@ FROM cc JOIN sz USING (cluster_id)
 @register("dedup_clusters", _DEDUP_CLUSTERS_SQL)
 def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The clustering step of the fuzzy-dedup pipeline: fold the verified
-    near-dup pairs into connected components (iterative min-label
-    propagation with path halving, operators/graph.py) and mark the min-id
-    doc per cluster canonical.
+    near-dup pairs into connected components (driver-side union-find at
+    or under ``LOCAL_CC_MAX_EDGES`` edges, big-star above it;
+    operators/graph.py) and mark the min-id doc per cluster canonical.
 
     Exact-duplicate pre-contraction: byte-identical (after normalize)
     docs never need the LSH/verify machinery — ONE content-hash agg maps
@@ -2240,15 +2240,14 @@ def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("dedup_clusters_bigstar", _DEDUP_CLUSTERS_SQL)
 def dedup_clusters_bigstar_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clusters through the alternating large-star/small-star CC
-    (Kiveris et al., SoCC'14; operators/graph.py) — round count bounded
-    O(log² n) independent of graph diameter, the variant for adversarial
-    chain-shaped dup graphs. Output (and oracle) identical to
-    ``dedup_clusters``; only the propagation harness differs."""
+    """Same clusters as ``dedup_clusters``, computed over the verified
+    pairs of the UNCONTRACTED corpus (no exact-duplicate pre-contraction):
+    the same connected components (operators/graph.py) over a larger
+    pair frame. Output (and oracle) identical to ``dedup_clusters``."""
     from .operators.graph import dedup_clusters
 
     ver = _verified_pairs(spark, sf_dir).select("id_a", "id_b")
-    return dedup_clusters(ver, algorithm="bigstar")
+    return dedup_clusters(ver)
 
 
 # ===========================================================================
@@ -13573,7 +13572,9 @@ def hits_customer_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the score frames are node-bounded, ``e`` is edge-sized; hinting
     # the score side while runtime-counted small keeps the edge frame
     # un-shuffled through all 8 half-steps. Larger graphs keep SMJ.
-    _bcast_nodes = h.count() <= 2_000_000
+    from .operators.graph import BROADCAST_NODES_MAX
+
+    _bcast_nodes = h.count() <= BROADCAST_NODES_MAX
     a = None
     for _ in range(4):
         hc = h.withColumnRenamed("id", "c")

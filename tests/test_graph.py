@@ -1,8 +1,7 @@
 """Connected components (operators/graph.py): correctness on shapes that
-stress the propagation loop — chains (diameter), stars, multiple
-components, and the canonical-pick bookkeeping."""
-
-from pyspark.sql import functions as F
+stress both paths — chains (diameter), stars, multiple components, the
+NULL/self-loop input contract, the round cap, and the canonical-pick
+bookkeeping."""
 
 from simpletasks_data_spark.operators.graph import connected_components, dedup_clusters
 
@@ -72,25 +71,17 @@ def test_incremental_minhash_matches(spark):
     assert out[101] == (None, False)  # genuinely novel
 
 
-def _cc_big(spark, pairs):
-    from simpletasks_data_spark.operators.graph import connected_components_bigstar
-
-    df = spark.createDataFrame(pairs, "a bigint, b bigint")
-    out = connected_components_bigstar(df, "a", "b")
-    return {r.id: r.component for r in out.collect()}
-
-
 def test_bigstar_two_components_and_star(spark, cc_paths):
     for _ in cc_paths():
-        got = _cc_big(spark, [(1, 2), (2, 3), (10, 11), (10, 12), (10, 13)])
+        got = _cc(spark, [(1, 2), (2, 3), (10, 11), (10, 12), (10, 13)])
         assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 13: 10}
 
 
 def test_bigstar_long_chain(spark, cc_paths):
-    # the adversarial shape for label propagation: a 60-node path
+    # the long-diameter shape big-star's round count does not grow with
     pairs = [(i, i + 1) for i in range(60)]
     for _ in cc_paths():
-        got = _cc_big(spark, pairs)
+        got = _cc(spark, pairs)
         assert set(got.values()) == {0}
         assert len(got) == 61
 
@@ -98,22 +89,36 @@ def test_bigstar_long_chain(spark, cc_paths):
 def test_bigstar_matches_label_prop_random(spark, cc_paths):
     import random
 
+    from test_graph_python_refs import _py_components
+
     rng = random.Random(7)
     pairs = [(rng.randrange(60), rng.randrange(60)) for _ in range(50)]
     pairs = [(a, b) for a, b in pairs if a != b]
     for _ in cc_paths():
-        lp = _cc(spark, pairs)
-        bs = _cc_big(spark, pairs)
-        assert lp == bs
+        assert _cc(spark, pairs) == _py_components(pairs)
 
 
 def test_dedup_clusters_bigstar_algorithm(spark, cc_paths):
-    from simpletasks_data_spark.operators.graph import dedup_clusters
-
-    df = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "id_a bigint, id_b bigint")
+    # reversed orientation under caller-named columns
+    df = spark.createDataFrame([(2, 1), (3, 2), (8, 7)], "x bigint, y bigint")
     for _ in cc_paths():
-        out = {r.doc_id: r for r in dedup_clusters(df, algorithm="bigstar").collect()}
+        out = {r.doc_id: r for r in dedup_clusters(df, "x", "y").collect()}
         assert out[1].is_canonical and out[3].cluster_size == 3 and out[8].cluster_id == 7
+
+
+def test_cc_round_cap_raises_convergence_error(spark, monkeypatch):
+    """Big-star confirms its fixed point one round after reaching it, so
+    a one-round cap cannot converge on a 60-node chain: the call must
+    raise, not return unconverged labels."""
+    import pytest
+
+    from simpletasks_data_spark.operators import graph
+
+    monkeypatch.setattr(graph, "LOCAL_CC_MAX_EDGES", 0)
+    monkeypatch.setattr(graph, "CC_MAX_ROUNDS", 1)
+    df = spark.createDataFrame([(i, i + 1) for i in range(60)], "a bigint, b bigint")
+    with pytest.raises(graph.ConvergenceError):
+        connected_components(df, "a", "b")
 
 
 def test_kcore_path_graph_truncation_warns_and_fixpoint_loops(spark):
@@ -178,17 +183,17 @@ def test_sssp_bounded_weighted_path(spark):
     assert d1 == {1: 0, 2: 5, 3: 20}
 
 
-def _labels(fn, df):
-    return {r.id: r.component for r in fn(df, "a", "b").collect()}
+def _labels(df):
+    return {r.id: r.component for r in connected_components(df, "a", "b").collect()}
 
 
 def test_cc_local_path_matches_distributed_hypothesis(spark):
-    """The driver-side union-find and both distributed loops agree on
-    random graphs mixing random edges, chains, stars, self-loops, and
-    duplicate and reversed edges (label propagation keeps self-loop
-    nodes; big-star drops them — each path must match its own loop)."""
+    """The driver-side union-find and big-star agree with each other and
+    with the pure-Python reference on random graphs mixing random edges,
+    chains, stars, self-loops, and duplicate and reversed edges."""
     import pytest
     from hypothesis import HealthCheck, given, settings, strategies as st
+    from test_graph_python_refs import _py_components
 
     from simpletasks_data_spark.operators import graph
 
@@ -209,26 +214,24 @@ def test_cc_local_path_matches_distributed_hypothesis(spark):
     @given(graphs())
     def check(edges):
         df = spark.createDataFrame(edges, "a long, b long")
-        for fn in (graph.connected_components, graph.connected_components_bigstar):
-            local = _labels(fn, df)
-            with pytest.MonkeyPatch.context() as m:
-                m.setattr(graph, "LOCAL_CC_MAX_EDGES", 0)
-                assert _labels(fn, df) == local
+        local = _labels(df)
+        assert local == _py_components(edges)
+        with pytest.MonkeyPatch.context() as m:
+            m.setattr(graph, "LOCAL_CC_MAX_EDGES", 0)
+            assert _labels(df) == local
 
     check()
 
 
-def test_cc_null_endpoint_takes_distributed_path(spark, monkeypatch):
-    """A NULL endpoint shuts the local gate: both algorithms return the
-    rows their distributed loops always returned (label propagation
-    labels the NULL node; big-star drops the NULL edge)."""
-    from simpletasks_data_spark.operators import graph
-
-    def local(edges):
-        raise AssertionError("a NULL endpoint took the local path")
-
-    monkeypatch.setattr(graph, "_local_components", local)
-    df = spark.createDataFrame([(1, None), (1, 2), (3, 4)], "a bigint, b bigint")
-    assert _labels(graph.connected_components, df) == {1: 1, 2: 1, 3: 3, 4: 3, None: 1}
-    assert _labels(graph.connected_components_bigstar, df) == {1: 1, 2: 1, 3: 3, 4: 3}
+def test_cc_drops_null_endpoints_and_self_loops_on_both_paths(spark, cc_paths):
+    """Edges with a NULL endpoint and self-loops are dropped before the
+    gate, the same way on both paths: a node seen only on such edges
+    gets no row, and a NULL no longer shuts the local gate (``cc_paths``
+    asserts the first pass ran union-find)."""
+    df = spark.createDataFrame(
+        [(1, None), (None, 5), (None, None), (6, 6), (2, 2), (1, 2), (3, 4)],
+        "a bigint, b bigint",
+    )
+    for _ in cc_paths():
+        assert _labels(df) == {1: 1, 2: 1, 3: 3, 4: 3}
 

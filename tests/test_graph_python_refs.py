@@ -1,7 +1,8 @@
 """Randomized independent-reference tests for the iterative graph
 kernels (r7 verdict item 8 discipline, extended to the graph family):
-``pagerank`` / personalized PageRank, ``sssp_bounded``, and ``k_core``
-checked against pure-Python loops that share no code with either engine.
+``pagerank`` / personalized PageRank, ``sssp_bounded``, ``k_core`` and
+``connected_components`` checked against pure-Python loops that share
+no code with either engine.
 
 The PageRank reference transcribes the INTEGER-grid contract
 (operators/graph.py:244): per-edge contribution = half-up round of the
@@ -22,7 +23,7 @@ round-for-round, exact equality.
 import os
 import random
 import sys
-from collections import Counter
+from collections import Counter, deque
 from decimal import ROUND_HALF_UP, Decimal
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -189,10 +190,7 @@ def _py_triangles(pairs):
 
 
 def test_triangle_count_matches_bruteforce_random(spark):
-    from simpletasks_data_spark.operators.graph import (
-        triangle_count,
-        triangle_count_degree_oriented,
-    )
+    from simpletasks_data_spark.operators.graph import triangle_count
 
     rng = random.Random(85)
     for trial in range(5):
@@ -203,11 +201,60 @@ def test_triangle_count_matches_bruteforce_random(spark):
         want = _py_triangles(pairs)
         got = {r["id"]: r["n_triangles"] for r in triangle_count(e).collect()}
         assert got == want, trial
-        got_deg = {
-            r["id"]: r["n_triangles"]
-            for r in triangle_count_degree_oriented(e).collect()
-        }
-        assert got_deg == want, trial
+
+
+def _py_components(pairs):
+    """Min-id component label per node, by BFS over the undirected
+    adjacency. Edges with a NULL endpoint and self-loops are skipped, so
+    a node seen only on those gets no label (the ``connected_components``
+    input contract)."""
+    adj = {}
+    for a, b in pairs:
+        if a is None or b is None or a == b:
+            continue
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    label = {}
+    for start in sorted(adj):  # the first unlabeled node is its component's min
+        if start in label:
+            continue
+        label[start] = start
+        queue = deque([start])
+        while queue:
+            for m in adj[queue.popleft()]:
+                if m not in label:
+                    label[m] = start
+                    queue.append(m)
+    return label
+
+
+def _random_cc_edges(rng):
+    """Random edges plus a chain and a star, duplicated and reversed
+    edges, self-loops, and NULL endpoints, shuffled."""
+    n = rng.randrange(5, 60)
+    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(rng.randrange(1, 40))]
+    start = rng.randrange(100, 200)
+    edges += [(start + i, start + i + 1) for i in range(rng.randrange(1, 40))]
+    hub = rng.randrange(300, 400)
+    edges += [(hub, 1000 + 10 * hub + j) for j in range(rng.randrange(1, 12))]
+    edges += [(b, a) for a, b in rng.sample(edges, 5)]
+    edges += rng.sample(edges, 5)
+    edges += [(i, i) for i in rng.sample(range(n + 5), 3)]
+    edges += [(rng.randrange(n), None), (None, rng.randrange(n)), (None, None), (n + 7, None)]
+    rng.shuffle(edges)
+    return edges
+
+
+def test_connected_components_matches_python_bfs_random(spark, cc_paths):
+    from simpletasks_data_spark.operators.graph import connected_components
+
+    rng = random.Random(31)
+    graphs = [_random_cc_edges(rng) for _ in range(4)]
+    for _ in cc_paths():
+        for trial, edges in enumerate(graphs):
+            df = spark.createDataFrame(edges, "a long, b long")
+            got = {r["id"]: r["component"] for r in connected_components(df, "a", "b").collect()}
+            assert got == _py_components(edges), trial
 
 
 def _py_bfs_reach(pairs, seeds, radius):

@@ -7,7 +7,7 @@ testdata so a future refactor cannot silently diverge them:
 - the shared (doc_id, token, tf) store feeding bm25/jaccard retrieval
   (``tf_frame`` / ``tok_frame`` operator parameters),
 - the gated node-side broadcast in the iterative graph operators
-  (``broadcast_nodes_limit``), and
+  (``graph.BROADCAST_NODES_MAX``), and
 - ``dedup_minhash_eval``'s verified-pairs-store truth leg vs the direct
   subsample PPJoin.
 """
@@ -57,10 +57,11 @@ def test_jaccard_tok_frame_path_matches_default(spark):
     assert _rows(default, cols) == _rows(stored, cols)
 
 
-def test_pagerank_broadcast_gate_is_result_invariant(spark):
-    """broadcast_nodes_limit only changes the JOIN STRATEGY; scores must
-    be bit-identical with the gate forced off (limit 0 -> SMJ path) and
+def test_pagerank_broadcast_gate_is_result_invariant(spark, monkeypatch):
+    """BROADCAST_NODES_MAX only changes the JOIN STRATEGY; scores must
+    be bit-identical with the gate forced off (cap 0 -> SMJ path) and
     on (default -> node-side broadcast)."""
+    from simpletasks_data_spark.operators import graph
     from simpletasks_data_spark.operators.graph import pagerank
 
     pairs = Q._trade_pairs_store(spark, SF).select(
@@ -70,7 +71,8 @@ def test_pagerank_broadcast_gate_is_result_invariant(spark):
         pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
     )
     on = pagerank(edges, iterations=4)
-    off = pagerank(edges, iterations=4, broadcast_nodes_limit=0)
+    monkeypatch.setattr(graph, "BROADCAST_NODES_MAX", 0)
+    off = pagerank(edges, iterations=4)
     assert _rows(on, ["id", "score"]) == _rows(off, ["id", "score"])
 
 
@@ -145,15 +147,14 @@ def test_containment_fused_prefix_matches_bruteforce(spark):
 def test_bigstar_window_form_matches_minlabel_cc(spark, cc_paths):
     """The r11 window-form big-star round (two window mins + one explode
     replacing the two groupBy+self-join phases) must produce exactly the
-    same components as min-label propagation on an adversarial mix:
+    components of the pure-Python BFS reference on an adversarial mix:
     a long chain (the shape big-star exists for), stars, duplicate and
     reversed edges, and an isolated pair."""
     import random
 
-    from simpletasks_data_spark.operators.graph import (
-        connected_components,
-        connected_components_bigstar,
-    )
+    from test_graph_python_refs import _py_components
+
+    from simpletasks_data_spark.operators.graph import connected_components
 
     rng = random.Random(11)
     edges = [(i, i + 1) for i in range(100, 160)]  # 61-node chain
@@ -163,9 +164,8 @@ def test_bigstar_window_form_matches_minlabel_cc(spark, cc_paths):
     edges += [(b, a) for a, b in edges[:30]]  # reversed duplicates
     df = spark.createDataFrame(edges, "a: long, b: long")
     for _ in cc_paths():
-        got = _rows(connected_components_bigstar(df, "a", "b"), ["id", "component"])
-        want = _rows(connected_components(df, "a", "b"), ["id", "component"])
-        assert got == want and len(got) > 0
+        got = _rows(connected_components(df, "a", "b"), ["id", "component"])
+        assert got == sorted(_py_components(edges).items()) and len(got) > 0
 
 
 def test_hyperball_packed_matches_row_form_exactly(spark):

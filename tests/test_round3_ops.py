@@ -149,22 +149,6 @@ def test_skyline_3d_known_frontier(spark):
     assert got == [1, 2, 3, 4, 6]
 
 
-def test_triangle_degree_oriented_matches_id_oriented(spark):
-    import random
-
-    from simpletasks_data_spark.operators.graph import (
-        triangle_count,
-        triangle_count_degree_oriented,
-    )
-
-    rng = random.Random(7)
-    edges = sorted({tuple(sorted(rng.sample(range(30), 2))) for _ in range(120)})
-    df = spark.createDataFrame(edges, "u long, v long")
-    a = {(r["id"], r["n_triangles"]) for r in triangle_count(df).collect()}
-    b = {(r["id"], r["n_triangles"]) for r in triangle_count_degree_oriented(df).collect()}
-    assert a == b and len(a) > 0
-
-
 def test_pca_recovers_dominant_direction(spark):
     from simpletasks_data_spark.operators.clustering import pca_power_top1
 
