@@ -59,7 +59,7 @@ from pyspark.sql import types as T
 
 from ..mapping import BoundMapping
 from ..session import observed
-from ..sources.base import SRC_POS, ImportMode, Source
+from ..sources.base import SRC_POS, ImportMode, Source, overrides
 
 ORIG = "_orig_"
 CREATING = "_creating"
@@ -124,11 +124,18 @@ def merge_source(
     mapped_names = [c.name for c in mapped]
     tracked = [c[len(HIST):] for c in image.columns if c.startswith(HIST)]
 
+    # Columns are immutable: each one used more than once is built once.
+    pos = F.col(SRC_POS)
+    key = F.col("_key")
+    imported = F.col("_imp")
+    gate = F.col("_gate")
+    matched = F.col("_matched")
+
     # ---- scan -> header skip -> row filter (importtask.py:220-225) --------
     raw = source.load_raw(spark)
     header_n = source.get_header_line_number()
     if header_n >= 0:
-        raw = raw.filter(F.col(SRC_POS) > header_n)
+        raw = raw.filter(pos > header_n)
     pred = source.should_import(raw)
     if pred is not None:
         raw = raw.withColumn("_imp", pred)
@@ -136,7 +143,7 @@ def merge_source(
         raw = raw.withColumn("_imp", F.lit(True))
 
     # ---- project: parse every mapped column + err channel -----------------
-    proj_cols = [F.col(SRC_POS), F.col("_imp")]
+    proj_cols = [pos, imported]
     for bc in mapped:
         v, e = bc.exprs(raw)
         proj_cols.append(v.alias("v_" + bc.name))
@@ -156,7 +163,7 @@ def merge_source(
     if need_match_join:
         image_keys = (
             image.select(bound.normalize_key(F.col(key_name)).alias("_key"))
-            .where(F.col("_key").isNotNull())
+            .where(key.isNotNull())
             .distinct()
         )
         pre = pre.join(image_keys.withColumn("_m", F.lit(True)), on="_key", how="left")
@@ -165,6 +172,8 @@ def merge_source(
         # warn counts for matched rows' should_update=False columns become
         # an upper bound (already documented as approximate)
         matched_static = F.lit(False)
+
+    key_ok = imported & key.isNotNull()
 
     # Within-source dynamics: once a CREATE-capable source has seen a key, a
     # later duplicate row probes the *pending* item and is "matched"
@@ -175,26 +184,22 @@ def merge_source(
     # for should_update=False columns become the same documented upper
     # bound as the skipped match join above.
     if can_create and not can_update:
-        w_first = F.min(F.when(F.col("_imp") & F.col("_key").isNotNull(), F.col(SRC_POS))).over(
-            Window.partitionBy("_key")
-        )
-        matched_dyn = matched_static | (F.col(SRC_POS) > w_first)
+        w_first = F.min(F.when(key_ok, pos)).over(Window.partitionBy("_key"))
+        matched_dyn = matched_static | (pos > w_first)
     else:
         matched_dyn = matched_static
 
-    imported = F.col("_imp")
-    key_ok = imported & F.col("_key").isNotNull()
-    gate = key_ok & F.when(matched_dyn, F.lit(can_update)).otherwise(F.lit(can_create))
-    pre = pre.withColumn("_gate", gate).withColumn("_matched", matched_dyn)
+    gate_expr = key_ok & F.when(matched_dyn, F.lit(can_update)).otherwise(F.lit(can_create))
+    pre = pre.withColumn("_gate", gate_expr).withColumn("_matched", matched_dyn)
 
     # ---- counters over the pre-dedupe projection: Observation metrics
     # harvested by the downstream checkpoint job — no separate action -------
     pre_metrics = [
         F.count_if(~imported).alias("ignored"),
-        F.count_if(imported & F.col("_key").isNull()).alias("ignored_missing_id"),
-        F.count_if(key_ok & ~F.col("_matched") & F.lit(not can_create)).alias("ignored_not_created"),
-        F.count_if(key_ok & F.col("_matched") & F.lit(not can_update)).alias("ignored_not_updated"),
-        F.count_if(F.col("_gate")).alias("read"),
+        F.count_if(imported & key.isNull()).alias("ignored_missing_id"),
+        F.count_if(key_ok & ~matched & F.lit(not can_create)).alias("ignored_not_created"),
+        F.count_if(key_ok & matched & F.lit(not can_update)).alias("ignored_not_updated"),
+        F.count_if(gate).alias("read"),
     ]
     # Warn counts (reference logger.warning sites, importtask.py:262-284).
     # A column is "reached" by a row when the row is gated and either the
@@ -202,15 +207,16 @@ def merge_source(
     # skips only_if_null columns whose pending value is non-NULL — that
     # check needs the join image, so warn counts for such columns are an
     # upper bound; documented.)
+    vals = {bc.name: F.col("v_" + bc.name) for bc in mapped}
+    errs = {bc.name: F.coalesce(F.col("e_" + bc.name), F.lit(False)) for bc in mapped}
     pre_dtypes = dict(zip(pre.schema.names, [f.dataType for f in pre.schema.fields]))
     warn_names: List[str] = []
     for bc in mapped:
         spec = bc.spec
         if not (spec.warn_on_error or spec.warn_if_empty):
             continue
-        v_c = F.col("v_" + bc.name)
-        e_c = F.coalesce(F.col("e_" + bc.name), F.lit(False))
-        reaches = F.col("_gate") & (~F.col("_matched") | F.lit(spec.should_update))
+        v_c, e_c = vals[bc.name], errs[bc.name]
+        reaches = gate & (~matched | F.lit(spec.should_update))
         cond = F.lit(False)
         if spec.warn_on_error:
             cond = cond | (reaches & e_c)
@@ -223,12 +229,11 @@ def merge_source(
     # ---- policy-aware per-key fold: ONE hash agg, no window sort ----------
     # (duplicate-key semantics per the module docstring)
     by_name = {bc.name: bc for bc in mapped}
-    qual_gate = F.when(F.col("_gate"), F.col(SRC_POS))
-    aggs = [F.max(F.col("_gate")).alias("_has_vals")]
+    qual_gate = F.when(gate, pos)
+    aggs = [F.max(gate).alias("_has_vals")]
     for bc in mapped:
         n = bc.name
-        v = F.col("v_" + n)
-        e = F.coalesce(F.col("e_" + n), F.lit(False))
+        v, e = vals[n], errs[n]
         if not bc.spec.should_update:
             # first gated (creating) row's value + err
             aggs.append(
@@ -236,17 +241,14 @@ def merge_source(
             )
         elif bc.spec.should_update_only_if_null:
             # first non-error, non-NULL value blocks all later ones
-            aggs.append(
-                F.min_by(v, F.when(F.col("_gate") & ~e & v.isNotNull(), F.col(SRC_POS))).alias(
-                    "u_" + n
-                )
-            )
+            aggs.append(F.min_by(v, F.when(gate & ~e & v.isNotNull(), pos)).alias("u_" + n))
         else:
             # last non-error value; whether ANY non-error gated row exists
-            aggs.append(F.max_by(v, F.when(F.col("_gate") & ~e, F.col(SRC_POS))).alias("u_" + n))
-            aggs.append(F.max(F.when(F.col("_gate") & ~e, F.lit(True))).alias("ok_" + n))
+            good = gate & ~e
+            aggs.append(F.max_by(v, F.when(good, pos)).alias("u_" + n))
+            aggs.append(F.max(F.when(good, F.lit(True))).alias("ok_" + n))
     s = (
-        pre.where(F.col("_key").isNotNull() & F.col("_imp"))
+        pre.where(key.isNotNull() & imported)
         .groupBy("_key")
         .agg(*aggs)
         .withColumn("_s_present", F.lit(True))
@@ -264,17 +266,19 @@ def merge_source(
     is_update = t_here & s_here & s_vals & F.lit(can_update)
     is_insert = ~t_here & s_here & s_vals & F.lit(can_create)
 
+    cur = {c: F.col(c) for c in target_cols}
+    orig = {c: F.col(ORIG + c) for c in target_cols}
+    image_dtypes = dict(image.dtypes)
     out_cols: List = []
     upd_parts: Dict[str, Tuple[Column, Column, Column]] = {}  # name -> (upd_ok, eq_pending, eq_orig)
     for c in target_cols:
-        t_c = F.col(c)
-        orig_c = F.col(ORIG + c)
+        t_c, orig_c = cur[c], orig[c]
         bc = by_name.get(c)
         if bc is None:
-            new_c = F.when(is_insert, F.lit(None).cast(dict_dtype(image, c))).otherwise(t_c)
+            new_c = F.when(is_insert, F.lit(None).cast(image_dtypes[c])).otherwise(t_c)
         elif not bc.spec.should_update:
             f = F.col("f_" + c)
-            ins_val = F.when(f.getField("e"), F.lit(None).cast(dict_dtype(image, c))).otherwise(
+            ins_val = F.when(f.getField("e"), F.lit(None).cast(image_dtypes[c])).otherwise(
                 f.getField("v")
             )
             new_c = F.when(is_insert, ins_val).otherwise(t_c)
@@ -320,9 +324,12 @@ def merge_source(
             )
         hist_cols.append(new_h.alias("h_" + c))
 
+    creating = F.col(CREATING)
+    th = F.col("_th")
+    sh = F.col("_sh")
     j = j.select(
-        *[F.col(ORIG + c) for c in target_cols],
-        F.col(CREATING),
+        *orig.values(),
+        creating,
         F.col("_t_key"),
         t_here.alias("_th"),
         s_here.alias("_sh"),
@@ -333,43 +340,46 @@ def merge_source(
 
     # Rows that exist on neither branch's output: source-only keys that may
     # not create (UPDATE-only unknown keys, importtask.py:234-237).
-    j = j.where(F.col("_th") | (F.col("_sh") & F.col("_sv") & F.lit(can_create)))
+    j = j.where(th | (sh & F.col("_sv") & F.lit(can_create)))
 
-    new_creating = F.when(~F.col("_th"), F.lit(True)).otherwise(F.col(CREATING))
+    new_creating = F.when(~th, F.lit(True)).otherwise(creating)
 
     out = j.select(
         *[F.col("n_" + c).alias(c) for c in target_cols],
-        *[F.col(ORIG + c) for c in target_cols],
+        *orig.values(),
         new_creating.alias(CREATING),
         *[F.col("h_" + c).alias(HIST + c) for c in tracked],
-        F.col("_th").alias("_was_target"),
-        F.col("_sh").alias("_seen"),
+        th.alias("_was_target"),
+        sh.alias("_seen"),
     )
 
     # ---- per-source validate_updates hook (importsource.py:109-123) -------
-    hook = source.validate_updates(
-        F.struct(*[F.col(c) for c in target_cols]),
-        F.struct(*[F.col(ORIG + c).alias(c) for c in target_cols]),
-        F.col(CREATING),
-    )
-    changed_any = F.lit(False)
-    for c in target_cols:
-        bc = by_name.get(c)
-        cmp_eq = (
-            bc.spec.compare_expr(F.col(c), F.col(ORIG + c))
-            if bc is not None
-            else F.col(c).eqNullSafe(F.col(ORIG + c))
+    # Built only for a source that overrides the hook: the default accepts
+    # everything, and its inputs are two structs over every target column.
+    seen = F.col("_seen")
+    invalid = F.lit(False)
+    hook = None
+    if overrides(source, Source, "validate_updates"):
+        hook = source.validate_updates(
+            F.struct(*cur.values()),
+            F.struct(*[orig[c].alias(c) for c in target_cols]),
+            creating,
         )
-        changed_any = changed_any | ~cmp_eq
-    pending_item = changed_any | F.col(CREATING)
     if hook is not None:
-        invalid = F.col("_seen") & pending_item & ~F.coalesce(hook, F.lit(True))
-    else:
-        invalid = F.lit(False)
+        changed_any = F.lit(False)
+        for c in target_cols:
+            bc = by_name.get(c)
+            cmp_eq = (
+                bc.spec.compare_expr(cur[c], orig[c])
+                if bc is not None
+                else cur[c].eqNullSafe(orig[c])
+            )
+            changed_any = changed_any | ~cmp_eq
+        invalid = seen & (changed_any | creating) & ~F.coalesce(hook, F.lit(True))
 
     # not_found: target rows whose key never appeared (anti-join semantics
     # of WHEN NOT MATCHED BY SOURCE; importtask.py:299-301).
-    nf_pred = F.col("_was_target") & ~F.col("_seen")
+    nf_pred = F.col("_was_target") & ~seen
 
     out, read_post = observed(
         out,
@@ -396,7 +406,9 @@ def merge_source(
         # Applied lazily over the checkpointed frame (importtask.py:287-292).
         out = revert_rejected(out, invalid, target_cols)
 
-    nf_handled = source.on_data_not_found(finalize_image(out.where(nf_pred), target_cols))
+    nf_handled = None
+    if overrides(source, Source, "on_data_not_found"):
+        nf_handled = source.on_data_not_found(finalize_image(out.where(nf_pred), target_cols))
 
     keep_cols = (
         list(target_cols) + [ORIG + c for c in target_cols] + [CREATING] + [HIST + c for c in tracked]
@@ -410,16 +422,16 @@ def merge_source(
         kept = out.where(~nf_pred).select(*keep_cols)
         nf_orig = out.where(nf_pred).select(
             bound.normalize_key(F.col(key_name)).alias("_nfk"),
-            *[F.col(ORIG + c) for c in target_cols],
-            F.col(CREATING),
+            *orig.values(),
+            creating,
             *[F.col(HIST + c) for c in tracked],
         )
         handled = nf_handled.join(
             nf_orig, bound.normalize_key(nf_handled[key_name]) == nf_orig["_nfk"], "left"
         ).select(
             *[nf_handled[c] for c in target_cols],
-            *[F.col(ORIG + c) for c in target_cols],
-            F.coalesce(F.col(CREATING), F.lit(False)).alias(CREATING),
+            *orig.values(),
+            F.coalesce(creating, F.lit(False)).alias(CREATING),
             *[F.coalesce(F.col(HIST + c), F.lit(False)).alias(HIST + c) for c in tracked],
         )
         new_image = kept.unionByName(handled)
@@ -447,7 +459,3 @@ def revert_rejected(image: DataFrame, invalid: Column, target_cols: List[str]) -
         if c.startswith(HIST):
             reverted[c] = F.when(invalid, F.lit(False)).otherwise(F.col(c))
     return image.where(~(invalid & F.col(CREATING))).withColumns(reverted)
-
-
-def dict_dtype(df: DataFrame, col: str):
-    return dict(df.dtypes)[col]

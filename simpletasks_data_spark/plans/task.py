@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from ..mapping import BoundMapping
 from ..operators.merge import CREATING, HIST, ORIG, finalize_image, init_image
 from ..operators.merge import merge_source, revert_rejected
-from ..sources.base import Source
+from ..sources.base import Source, overrides
 from .history import HistorySpec, build_history
 from .target import TargetTable
 
@@ -100,7 +100,7 @@ class ImportJob:
     def validate_updates(self, new, old, creating):
         """Apply-time validation hook as a boolean Column over the final
         item image; None = use the default non-nullable check
-        (importtask.py:52-70)."""
+        (importtask.py:52-70). ``run`` calls it only when overridden."""
         return None
 
     # ----------------------------------------------------------------------
@@ -142,16 +142,19 @@ class ImportJob:
         results["postprocess"] = self.post_process()
 
         # ---- apply-time validation (importtask.py:313-321) ---------------
+        creating = F.col(CREATING)
         changed_any = F.lit(False)
         for c in target_cols:
             changed_any = changed_any | ~F.col(c).eqNullSafe(F.col(ORIG + c))
-        pending = changed_any | F.col(CREATING)
+        pending = changed_any | creating
 
-        hook = self.validate_updates(
-            F.struct(*[F.col(c) for c in target_cols]),
-            F.struct(*[F.col(ORIG + c).alias(c) for c in target_cols]),
-            F.col(CREATING),
-        )
+        hook = None
+        if overrides(self, ImportJob, "validate_updates"):
+            hook = self.validate_updates(
+                F.struct(*[F.col(c) for c in target_cols]),
+                F.struct(*[F.col(ORIG + c).alias(c) for c in target_cols]),
+                creating,
+            )
         if hook is None:
             valid = F.lit(True)
             for c in self.target.non_nullable_columns():
@@ -170,12 +173,12 @@ class ImportJob:
 
         agg = image.agg(
             F.count_if(invalid).alias("rejected"),
-            F.count_if(~invalid & F.col(CREATING)).alias("created"),
-            F.count_if(~invalid & ~F.col(CREATING) & changed_any).alias("updated"),
+            F.count_if(~invalid & creating).alias("created"),
+            F.count_if(~invalid & ~creating & changed_any).alias("updated"),
             F.count_if(
                 F.lit(self.keep_history and bool(tracked))
                 & ~invalid
-                & ~F.col(CREATING)
+                & ~creating
                 & hist_changed
             ).alias("history_created"),
         ).collect()[0]  # c: 1row

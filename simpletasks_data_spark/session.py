@@ -19,6 +19,21 @@ The engine targets a 1000-executor cluster reading ~100 TB; locally we run
   warm call evicts and recompiles about 115 of them (70 after the local
   CC gate); with 1000 entries a warm call compiles none (counts from
   ``CodegenMetrics``, four calls in a fresh ``local[4]`` session).
+- DataFrame call-site capture OFF
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  PySpark wraps every DataFrame and Column call in ``_with_origin``
+  (``pyspark/errors/utils.py``), which looks up the active session, reads
+  a conf and sets and clears a JVM-side origin: three or more extra Py4J
+  round trips per call, plus a Python stack walk. Turning it off cut the
+  calling thread's round trips in a tiny two-source import from 11.3k
+  to 3.3k. Errors still raise the same named
+  ``AnalysisException``; only the Python file:line in the DataFrame
+  query context is lost. The conf is static: it can only be set when the
+  session is built (``spark.conf.set`` raises
+  ``CANNOT_MODIFY_STATIC_CONFIG``, and ``getOrCreate`` on an existing
+  session skips it), and PySpark caches its value process-wide on first
+  use. So ``pin_session_confs`` cannot assert it, and a FOREIGN session
+  built without it keeps call-site capture and its round trips.
 
 Also home to the two per-session helpers every operator shares:
 ``observed`` (a counter read off a job that already runs) and
@@ -72,6 +87,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # catalog writes (bucketed tables) must never land in a read-only CWD
         .config(
@@ -92,7 +108,9 @@ def pin_session_confs(spark: SparkSession) -> None:
     on a FOREIGN session (the external driver calls queries with its own
     SparkSession): non-ANSI parsing (failure -> NULL, the reference's
     try/except model) and a UTC session timezone so event-time windows
-    and timestamp round-trips hash-match a UTC-naive oracle."""
+    and timestamp round-trips hash-match a UTC-naive oracle. Call-site
+    capture (see the module docstring) is a static conf, so a foreign
+    session keeps whatever it was built with."""
     try:
         spark.conf.set("spark.sql.ansi.enabled", "false")
         spark.conf.set("spark.sql.session.timeZone", "UTC")

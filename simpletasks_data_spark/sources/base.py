@@ -13,6 +13,10 @@ hooks become Column predicates so they run distributed, not on the driver:
 - ``on_data_not_found`` (``importsource.py:125-133``) -> optional transform
   applied to the not-found target slice (e.g. flag / delete).
 
+The merge calls ``validate_updates`` and ``on_data_not_found`` only when a
+subclass or the instance overrides them (``overrides``): the defaults
+return None, and their inputs cost Py4J round trips to build.
+
 Ordering: the reference reads sources row-by-row in file order, which gives
 within-source duplicate keys "last occurrence wins" semantics
 (``importtask.py:266-270``). Distributed reads do not preserve a global
@@ -88,6 +92,12 @@ class Source:
         (e.g. with a flag column updated, or emptied to delete) or None to
         keep those rows unchanged."""
         return None
+
+
+def overrides(obj: object, base: type, hook: str) -> bool:
+    """Whether ``obj`` replaces ``base.hook``, in its class or on the
+    instance itself. Callers skip building a default hook's inputs."""
+    return getattr(getattr(obj, hook), "__func__", None) is not getattr(base, hook)
 
 
 class _CallbackSource(Source):

@@ -13,10 +13,28 @@ Python's ``csv.reader`` (correct multi-line quoted records, unlike
 per-line ``from_csv``), and ``_src_pos`` encodes a total order consistent
 with file-then-line order without a driver-side counting pass.
 
+Width: with no ``ncols`` option, ``schema()`` counts the delimiters in
+the first line of the first non-empty file (in ``_paths`` order); that
+runs in the Python worker that loads the source, so sizing the schema
+costs no Spark job.
+
+Python workers: one source costs ``2 + partitions`` Python worker
+invocations — one to load it (``schema()``), one to plan the read
+(``reader()`` and ``partitions()``), and one per read partition. Each
+invocation costs about 0.3 CPU-s before it reads a byte (4-core VM,
+Python 3.11): worker set-up calls ``importlib.invalidate_caches()``,
+which makes every cached zipimporter re-read ``pyspark.zip``. On the
+benchmark's two-file CSV delta, the Python workers of a warm import
+call used 1.63-1.77 CPU-s with one partition per file and 1.18-1.20
+with both files in one partition (``scripts/driver_floor.py``).
+
 Two partitioning strategies (VERDICT r10 item 2):
 
-- **per-file** (default): one partition per file; supports multi-line
-  quoted records because a single reader sees the whole byte stream.
+- **per-file** (default): whole files, never split, so multi-line
+  quoted records parse because one reader sees each file's whole byte
+  stream. Consecutive files (sorted order) share a partition up to
+  ``_PACK_BYTES``, Spark's ``maxPartitionBytes`` default, so a directory
+  of small files is one Python task; each file is read in order.
   ``_src_pos = (file_idx << 40) | line_idx``.
 - **splittable** (``option("splittable", "true")``): each file splits
   into byte ranges aligned to line boundaries (Hadoop
@@ -29,7 +47,7 @@ Two partitioning strategies (VERDICT r10 item 2):
   splits are enumerated in byte order, so the encoding sorts identically
   to the global file-then-line order, and split 0 of file 0 yields the
   dense ``0, 1, 2, ...`` prefix the merge's header-skip predicate
-  (``operators/merge.py:130`` ``_src_pos > header_n``) relies on. A
+  (``operators/merge.py`` ``_src_pos > header_n``) relies on. A
   file that fits in one split produces positions bit-identical to the
   per-file path. CONTRACT: no multi-line quoted records (a quoted
   embedded newline would be torn at a split boundary — keep the per-file
@@ -55,16 +73,41 @@ _SPLIT_BITS = 12  # <= 4096 splits per file
 _LINE_BITS = 28  # < 268M lines per split (a split line is >= 2 bytes)
 _MAX_SPLITS = 1 << _SPLIT_BITS
 _DEFAULT_SPLIT_SIZE = 32 * 1024 * 1024
+# per-file mode packs whole consecutive files into one partition up to
+# this many bytes (Spark's spark.sql.files.maxPartitionBytes default)
+_PACK_BYTES = 128 * 1024 * 1024
+
+
+def _paths(path: str):
+    """The files a ``path`` option names, in read order: a directory's
+    entries or a glob's matches, sorted; a plain path as given."""
+    import glob
+    import os
+
+    if os.path.isdir(path):
+        return sorted(glob.glob(os.path.join(path, "*")))
+    return sorted(glob.glob(path)) or [path]
+
+
+def _sniff_width(options) -> int:
+    """Cells in the first line of the first non-empty file: delimiters
+    counted in the raw line, quoted ones included; 1 when all are empty."""
+    import os
+
+    delimiter = options.get("delimiter", ",")
+    for p in _paths(options["path"]):
+        if os.path.getsize(p):
+            with open(p, "r", encoding=options.get("encoding", "utf-8")) as f:
+                return f.readline().count(delimiter) + 1
+    return 1
 
 
 class _CsvFilePartition(InputPartition):
-    def __init__(self, path: str, file_idx: int, split_idx: int = 0,
-                 start: int = 0, end: int | None = None):
-        self.path = path
-        self.file_idx = file_idx
+    def __init__(self, files, split_idx: int = 0, start: int = 0, end: int | None = None):
+        self.files = files  # [(file_idx, path)], in order; one file when split
         self.split_idx = split_idx
         self.start = start
-        self.end = end  # None = whole file (per-file mode)
+        self.end = end  # None = whole files (per-file mode)
 
 
 class OrderedCsvReader(DataSourceReader):
@@ -72,30 +115,28 @@ class OrderedCsvReader(DataSourceReader):
         self.options = options
         self.ncols = ncols
 
-    def _paths(self):
-        import glob
-        import os
-
-        p = self.options["path"]
-        if os.path.isdir(p):
-            found = sorted(glob.glob(os.path.join(p, "*")))
-        else:
-            found = sorted(glob.glob(p)) or [p]
-        return found
-
     def partitions(self):
         import os
 
+        paths = _paths(self.options["path"])
         if self.options.get("splittable", "false").lower() != "true":
-            return [_CsvFilePartition(p, i) for i, p in enumerate(self._paths())]
+            parts, group, size = [], [], 0
+            for i, p in enumerate(paths):
+                n = os.path.getsize(p)
+                if group and size + n > _PACK_BYTES:
+                    parts.append(_CsvFilePartition(group))
+                    group, size = [], 0
+                group.append((i, p))
+                size += n
+            return parts + [_CsvFilePartition(group)] if group else parts
         split_size = int(self.options.get("split_size", str(_DEFAULT_SPLIT_SIZE)))
         parts = []
-        for i, p in enumerate(self._paths()):
+        for i, p in enumerate(paths):
             size = os.path.getsize(p)
             n = max(1, min((size + split_size - 1) // split_size, _MAX_SPLITS))
             bounds = [size * j // n for j in range(n + 1)]
             parts += [
-                _CsvFilePartition(p, i, j, bounds[j], bounds[j + 1])
+                _CsvFilePartition([(i, p)], j, bounds[j], bounds[j + 1])
                 for j in range(n)
             ]
         return parts
@@ -124,18 +165,20 @@ class OrderedCsvReader(DataSourceReader):
         quotechar = self.options.get("quote", '"')
         encoding = self.options.get("encoding", "utf-8")
         if partition.end is None:
-            base = partition.file_idx << (_SPLIT_BITS + _LINE_BITS)
-            with open(partition.path, "r", encoding=encoding, newline="") as f:
-                reader = csv.reader(f, delimiter=delimiter, quotechar=quotechar)
-                for line_idx, row in enumerate(reader):
-                    cells = list(row)[: self.ncols]
-                    cells += [None] * (self.ncols - len(cells))
-                    yield tuple(cells) + (base | line_idx,)
+            for file_idx, path in partition.files:
+                base = file_idx << (_SPLIT_BITS + _LINE_BITS)
+                with open(path, "r", encoding=encoding, newline="") as f:
+                    reader = csv.reader(f, delimiter=delimiter, quotechar=quotechar)
+                    for line_idx, row in enumerate(reader):
+                        cells = list(row)[: self.ncols]
+                        cells += [None] * (self.ncols - len(cells))
+                        yield tuple(cells) + (base | line_idx,)
             return
-        base = (partition.file_idx << (_SPLIT_BITS + _LINE_BITS)) | (
+        [(file_idx, path)] = partition.files
+        base = (file_idx << (_SPLIT_BITS + _LINE_BITS)) | (
             partition.split_idx << _LINE_BITS
         )
-        with open(partition.path, "rb") as f:
+        with open(path, "rb") as f:
             lines = (
                 ln.decode(encoding)
                 for ln in self._read_lines_split(f, partition.start, partition.end)
@@ -145,7 +188,7 @@ class OrderedCsvReader(DataSourceReader):
                 if line_idx >= (1 << _LINE_BITS):
                     raise ValueError(
                         f"ordered_csv: split {partition.split_idx} of "
-                        f"{partition.path} exceeds {1 << _LINE_BITS} lines; "
+                        f"{path} exceeds {1 << _LINE_BITS} lines; "
                         "raise split_size"
                     )
                 cells = list(row)[: self.ncols]
@@ -154,21 +197,23 @@ class OrderedCsvReader(DataSourceReader):
 
 
 class OrderedCsvDataSource(DataSource):
-    """format name: ``ordered_csv``; options: path (file/dir/glob), ncols,
-    delimiter, quote, encoding, splittable ("true" enables byte-range
-    splits — no multi-line quoted records), split_size (bytes)."""
+    """format name: ``ordered_csv``; options: path (file/dir/glob), ncols
+    (default: the first line's width), delimiter, quote, encoding,
+    splittable ("true" enables byte-range splits — no multi-line quoted
+    records), split_size (bytes)."""
 
     @classmethod
     def name(cls) -> str:
         return "ordered_csv"
 
     def schema(self) -> str:
-        ncols = int(self.options.get("ncols", "1"))
-        cols = ", ".join(f"_c{i} string" for i in range(ncols))
+        ncols = self.options.get("ncols")
+        n = int(ncols) if ncols is not None else _sniff_width(self.options)
+        cols = ", ".join(f"_c{i} string" for i in range(n))
         return f"{cols}, {SRC_POS} long"
 
     def reader(self, schema) -> OrderedCsvReader:
-        return OrderedCsvReader(self.options, int(self.options.get("ncols", "1")))
+        return OrderedCsvReader(self.options, len(schema.fields) - 1)
 
 
 def register_datasources(spark) -> None:

@@ -309,6 +309,63 @@ def test_on_data_not_found_flag(spark):
     assert res["updated"] == 2
 
 
+def test_job_validate_updates_override_reverts_rejected(spark):
+    """An ImportJob subclass overriding validate_updates replaces the
+    non-nullable check: rejected creates vanish and rejected updates
+    revert to the stored row (importtask.py:52-70, 319-321)."""
+    target_df = spark.createDataFrame(
+        [(1, "A", None, "c", None, None, None), (2, "B", None, "c", None, None, None)],
+        TARGET_SCHEMA,
+    )
+    target = TargetTable(schema=TARGET_SCHEMA, df=target_df, primary_keys=("id",), lengths=LENGTHS)
+
+    class StrictJob(ImportJob):
+        def validate_updates(self, new, old, creating):
+            return new["col3"] != "bad"
+
+    rows = [
+        ["hdr"] * 6,
+        ["1", "X", "", "bad", "", ""],   # update rejected: row 1 reverts
+        ["2", "Y", "", "ok", "", ""],    # update accepted
+        ["3", "Z", "", "bad", "", ""],   # create rejected: row 3 vanishes
+        ["4", "", "", "ok", "", ""],     # create accepted: NULL col1 passes the override
+    ]
+    job = StrictJob(spark, target, sources=[GeneratorSource(rows, MappingA(), name="s")], dryrun=True)
+    res = job.run()
+    assert (res["rejected"], res["updated"], res["created"]) == (2, 1, 1)
+    out = {r.id: (r.col1, r.col3) for r in job.result_df.collect()}
+    assert out == {1: ("A", "c"), 2: ("Y", "ok"), 4: (None, "ok")}
+
+
+def test_source_hooks_assigned_on_the_instance_are_called(spark):
+    """validate_updates and on_data_not_found set on a source instance
+    (not its class) still run: the merge asks the instance, not the
+    class, whether a hook is overridden."""
+    from pyspark.sql import functions as F
+
+    target_df = spark.createDataFrame(
+        [(1, "A", None, "c", None, None, None), (2, "B", None, "c", None, None, None),
+         (3, "C", None, "c", None, None, None)],
+        TARGET_SCHEMA,
+    )
+    target = TargetTable(schema=TARGET_SCHEMA, df=target_df, primary_keys=("id",), lengths=LENGTHS)
+    rows = [
+        ["hdr"] * 6,
+        ["1", "X", "", "bad", "", ""],   # rejected by the instance hook
+        ["2", "Y", "", "ok", "", ""],
+    ]
+    src = GeneratorSource(rows, MappingA(), name="s")
+    src.validate_updates = lambda new, old, creating: new["col3"] != "bad"
+    src.on_data_not_found = lambda nf: nf.withColumn("col4", F.lit("STALE"))
+    job = ImportJob(spark, target, sources=[src], dryrun=True)
+    res = job.run()
+    assert res["sources"][0]["rejected"] == 1
+    assert res["sources"][0]["not_found"] == 1
+    out = {r.id: r for r in job.result_df.collect()}
+    assert {i: (r.col1, r.col3) for i, r in out.items()} == {1: ("A", "c"), 2: ("Y", "ok"), 3: ("C", "c")}
+    assert out[3].col4 == "STALE"
+
+
 def test_duplicate_create_policy_fold(spark):
     """Within-source duplicate keys on a CREATED row: the insert takes the
     FIRST occurrence's values for should_update=False columns, later

@@ -9,6 +9,8 @@ import io
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from simpletasks_data_spark import queries as Q  # noqa: E402
@@ -162,6 +164,47 @@ def test_dedup_clusters_warm_call_reuses_generated_code(spark):
     run()
     run()
     assert metrics.METRIC_COMPILATION_TIME().getCount() - before <= 5
+
+
+def test_session_turns_off_call_site_capture(spark):
+    """``get_spark`` builds the session with DataFrame call-site capture
+    off; a typo'd column still raises the named analysis error."""
+    from pyspark.errors import AnalysisException
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    with pytest.raises(AnalysisException) as err:
+        spark.range(2).select("nope")
+    assert err.value.getCondition().startswith("UNRESOLVED_COLUMN")
+
+
+# Calling-thread Py4J round trips of one import below: 2,411 measured with
+# call-site capture off and the default hooks skipped, 11,276 before.
+IMPORT_PY4J_CEILING = 2770
+
+
+def test_import_driver_floor_py4j_round_trips(spark, monkeypatch):
+    """One tiny two-source ``ImportJob.run`` stays under a ceiling of
+    Py4J round trips on the calling thread. Each round trip is driver and
+    JVM work that no executor shares, and the count is deterministic,
+    unlike a time. Releases on Py4J's finalizer thread are not counted."""
+    import threading
+
+    from test_importjob_e2e import EXPECTED, make_job
+
+    client = spark.sparkContext._gateway._gateway_client
+    send, me, calls = client.send_command, threading.get_ident(), []
+
+    def counting(*args, **kwargs):
+        if threading.get_ident() == me:
+            calls.append(1)
+        return send(*args, **kwargs)
+
+    job = make_job(spark)
+    monkeypatch.setattr(client, "send_command", counting)
+    res = job.run()
+    monkeypatch.undo()
+    assert res == EXPECTED
+    assert len(calls) <= IMPORT_PY4J_CEILING, f"{len(calls)} Py4J round trips"
 
 
 def test_passage_dedupe_two_exchanges(spark):

@@ -480,3 +480,51 @@ def test_ordered_csv_datasource_splittable(spark, tmp_path):
     assert len(reader.partitions()) > 10
     # split 0 carries the dense 0..N prefix the header-skip gate needs
     assert pos[:3] == [0, 1, 2]
+
+
+def test_ordered_csv_sizes_schema_without_a_job(spark, tmp_path):
+    """With no num_columns the connector counts the first line's cells
+    itself: the first non-empty file in sorted order, the same width the
+    old ``spark.read.text(path).limit(1)`` sniff found, and no Spark job.
+    num_columns= still wins."""
+    (tmp_path / "a.csv").write_text("")
+    (tmp_path / "b.csv").write_text("1,2,3\n4,5,6\n")
+    (tmp_path / "c.csv").write_text("7,8,9\n")
+    path = str(tmp_path)
+    first = spark.read.text(path).limit(1).collect()
+    old_width = first[0].value.count(",") + 1
+
+    sc = spark.sparkContext
+    sc.setJobGroup("ordered-csv-sniff", "schema sizing")
+    try:
+        df = CsvSource(path, MappingA()).load_raw(spark)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup("ordered-csv-sniff")) == []
+    assert df.columns == [f"_c{i}" for i in range(old_width)] + [SRC_POS]
+    assert [r._c2 for r in df.orderBy(SRC_POS).collect()] == ["3", "6", "9"]
+
+    narrow = CsvSource(path, MappingA(), num_columns=2).load_raw(spark)
+    assert narrow.columns == ["_c0", "_c1", SRC_POS]
+
+
+def test_ordered_csv_packs_small_files_into_one_partition(spark, tmp_path, monkeypatch):
+    """Whole small files share one read partition (one Python task), read
+    in file order with the per-file ``_src_pos`` layout unchanged."""
+    from simpletasks_data_spark.sources import datasource
+
+    for i in range(3):
+        (tmp_path / f"f{i}.csv").write_text(f"{i}a,x\n{i}b,y\n")
+    opts = {"path": str(tmp_path)}
+    parts = datasource.OrderedCsvReader(opts, 2).partitions()
+    assert len(parts) == 1
+    df = CsvSource(str(tmp_path), MappingA()).load_raw(spark)
+    got = [(r._c0, r[SRC_POS]) for r in df.orderBy(SRC_POS).collect()]
+    assert got == [(f"{i}{c}", (i << 40) | j) for i in range(3) for j, c in enumerate("ab")]
+
+    # a cap of two files' size splits the group, still in file order
+    monkeypatch.setattr(datasource, "_PACK_BYTES", 20)
+    split = datasource.OrderedCsvReader(opts, 2).partitions()
+    assert [[i for i, _ in p.files] for p in split] == [[0, 1], [2]]
+    per_part = [row for p in split for row in datasource.OrderedCsvReader(opts, 2).read(p)]
+    assert [(c0, pos) for c0, _, pos in per_part] == got
