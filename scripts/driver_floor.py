@@ -116,31 +116,11 @@ def _cpu_delta(before: dict, after: dict) -> dict:
     return cpu
 
 
-@contextlib.contextmanager
-def _count_round_trips(spark, counts: dict):
-    """Count Py4J commands per Python thread while the block runs."""
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
-    lock = threading.Lock()
-
-    def counting(*args, **kwargs):
-        t = threading.get_ident()
-        with lock:
-            counts[t] = counts.get(t, 0) + 1
-        return send(*args, **kwargs)
-
-    client.send_command = counting
-    try:
-        yield
-    finally:
-        del client.send_command
-
-
 def measure(workload: str, seed: int, scale: float) -> dict:
     import workloads
 
     bench.isolate_scratch()
-    from simpletasks_data_spark.session import get_spark
+    from simpletasks_data_spark.session import count_py4j_round_trips, get_spark
 
     W = workloads.WORKLOADS[workload]
     work = os.path.join(bench.STATE, "driver_floor", workload)
@@ -163,10 +143,9 @@ def measure(workload: str, seed: int, scale: float) -> dict:
 
     W.reset(m)
     bench.settle(spark)
-    counts: dict = {}
     me = threading.get_ident()
     before, t0 = _snapshot(jvm), time.perf_counter()
-    with _count_round_trips(spark, counts):
+    with count_py4j_round_trips(spark) as counts:
         out = W.call(spark, m, no_span)
     wall = time.perf_counter() - t0
     after = _snapshot(jvm)

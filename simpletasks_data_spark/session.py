@@ -37,14 +37,17 @@ The engine targets a 1000-executor cluster reading ~100 TB; locally we run
 
 Also home to the two per-session helpers every operator shares:
 ``observed`` (a counter read off a job that already runs) and
-``session_store`` (a frame built once per session and input directory).
+``session_store`` (a frame built once per session and input directory),
+and to ``count_py4j_round_trips``, the driver-floor probe.
 """
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import os
 import tempfile
+import threading
 from typing import Any, Callable, Dict, Tuple
 
 from py4j.protocol import Py4JJavaError
@@ -116,6 +119,32 @@ def pin_session_confs(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     except Exception:
         pass
+
+
+@contextlib.contextmanager
+def count_py4j_round_trips(spark: SparkSession):
+    """Count the Py4J commands the driver sends while the block runs.
+    Yields a dict from Python thread id (``threading.get_ident()``) to its
+    count, filled as the block runs; besides the calling thread, Py4J's
+    finalizer thread releases Java objects the driver dropped. A count is
+    deterministic, unlike a time, and each command is driver and JVM work
+    that no executor shares."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    counts: Dict[int, int] = {}
+    lock = threading.Lock()
+
+    def counting(*args, **kwargs):
+        t = threading.get_ident()
+        with lock:
+            counts[t] = counts.get(t, 0) + 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield counts
+    finally:
+        del client.send_command
 
 
 def observed(df: DataFrame, *metrics: Column) -> Tuple[DataFrame, Callable[[], Dict[str, Any]]]:

@@ -23,18 +23,26 @@ invocations — one to load it (``schema()``), one to plan the read
 (``reader()`` and ``partitions()``), and one per read partition. Each
 invocation costs about 0.3 CPU-s before it reads a byte (4-core VM,
 Python 3.11): worker set-up calls ``importlib.invalidate_caches()``,
-which makes every cached zipimporter re-read ``pyspark.zip``. On the
-benchmark's two-file CSV delta, the Python workers of a warm import
-call used 1.63-1.77 CPU-s with one partition per file and 1.18-1.20
-with both files in one partition (``scripts/driver_floor.py``).
+which makes every cached zipimporter re-read ``pyspark.zip``. That is
+why per-file mode packs small files (below). Scans of one directory,
+``local[4]``, wall s / Python-worker CPU s, medians of six scans:
+
+    files          one per file   groups <= 4 MiB   groups <= 128 MiB
+    2 x 0.3 MiB      0.93 / 1.21      0.92 / 0.89        0.94 / 0.90
+    16 x 1 MiB       2.84 / 7.14      1.95 / 4.09        2.75 / 2.76
+    8 x 8 MiB        3.91 / 10.89     3.69 / 10.41       8.34 / 8.38
+
+A 128 MiB cap serialises a directory of medium files onto one core;
+4 MiB (Spark's ``openCostInBytes`` default) saves the set-up of small
+files and never puts two files of over 2 MiB on one task.
 
 Two partitioning strategies (VERDICT r10 item 2):
 
 - **per-file** (default): whole files, never split, so multi-line
   quoted records parse because one reader sees each file's whole byte
-  stream. Consecutive files (sorted order) share a partition up to
-  ``_PACK_BYTES``, Spark's ``maxPartitionBytes`` default, so a directory
-  of small files is one Python task; each file is read in order.
+  stream. Consecutive files (sorted order) share a partition while
+  their sizes sum to at most ``_PACK_BYTES`` (4 MiB); each file is read
+  in order.
   ``_src_pos = (file_idx << 40) | line_idx``.
 - **splittable** (``option("splittable", "true")``): each file splits
   into byte ranges aligned to line boundaries (Hadoop
@@ -74,8 +82,8 @@ _LINE_BITS = 28  # < 268M lines per split (a split line is >= 2 bytes)
 _MAX_SPLITS = 1 << _SPLIT_BITS
 _DEFAULT_SPLIT_SIZE = 32 * 1024 * 1024
 # per-file mode packs whole consecutive files into one partition up to
-# this many bytes (Spark's spark.sql.files.maxPartitionBytes default)
-_PACK_BYTES = 128 * 1024 * 1024
+# this many bytes (Spark's spark.sql.files.openCostInBytes default)
+_PACK_BYTES = 4 * 1024 * 1024
 
 
 def _paths(path: str):

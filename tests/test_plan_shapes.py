@@ -182,29 +182,22 @@ def test_session_turns_off_call_site_capture(spark):
 IMPORT_PY4J_CEILING = 2770
 
 
-def test_import_driver_floor_py4j_round_trips(spark, monkeypatch):
+def test_import_driver_floor_py4j_round_trips(spark):
     """One tiny two-source ``ImportJob.run`` stays under a ceiling of
     Py4J round trips on the calling thread. Each round trip is driver and
     JVM work that no executor shares, and the count is deterministic,
     unlike a time. Releases on Py4J's finalizer thread are not counted."""
     import threading
 
+    from simpletasks_data_spark.session import count_py4j_round_trips
     from test_importjob_e2e import EXPECTED, make_job
 
-    client = spark.sparkContext._gateway._gateway_client
-    send, me, calls = client.send_command, threading.get_ident(), []
-
-    def counting(*args, **kwargs):
-        if threading.get_ident() == me:
-            calls.append(1)
-        return send(*args, **kwargs)
-
     job = make_job(spark)
-    monkeypatch.setattr(client, "send_command", counting)
-    res = job.run()
-    monkeypatch.undo()
+    with count_py4j_round_trips(spark) as counts:
+        res = job.run()
+    calls = counts.get(threading.get_ident(), 0)
     assert res == EXPECTED
-    assert len(calls) <= IMPORT_PY4J_CEILING, f"{len(calls)} Py4J round trips"
+    assert calls <= IMPORT_PY4J_CEILING, f"{calls} Py4J round trips"
 
 
 def test_passage_dedupe_two_exchanges(spark):

@@ -528,3 +528,17 @@ def test_ordered_csv_packs_small_files_into_one_partition(spark, tmp_path, monke
     assert [[i for i, _ in p.files] for p in split] == [[0, 1], [2]]
     per_part = [row for p in split for row in datasource.OrderedCsvReader(opts, 2).read(p)]
     assert [(c0, pos) for c0, _, pos in per_part] == got
+
+
+def test_ordered_csv_keeps_medium_files_one_partition_each(tmp_path):
+    """Files too big to pair under the packing cap keep one read
+    partition (one Python task) each, so a directory of medium files
+    still scans on every core."""
+    from simpletasks_data_spark.sources import datasource
+
+    half = datasource._PACK_BYTES // 2 + 1
+    for i in range(3):
+        (tmp_path / f"f{i}.csv").write_bytes(b"a,b\n" * (half // 4 + 1))
+    (tmp_path / "f3.csv").write_text("a,b\n")
+    parts = datasource.OrderedCsvReader({"path": str(tmp_path)}, 2).partitions()
+    assert [[i for i, _ in p.files] for p in parts] == [[0], [1], [2, 3]]
