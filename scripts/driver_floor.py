@@ -17,7 +17,10 @@ measures one more call (``perfbench/workloads.py``) and prints:
   ``Thread-<n>``), the JIT compilers, garbage collection, and the rest
   (Spark's event loops, and threads that exited during the call);
 - CPU seconds of the Python workers, the ones alive after the call and
-  the ones reaped during it.
+  the ones reaped during it;
+- the Spark jobs, tasks and shuffle-write bytes of the call, counted
+  through one job group around it (``perfbench/spans.py``), so a cut in
+  jobs shows without a traced benchmark run.
 
 All CPU figures are user + system time read from ``/proc``. The workload
 inputs go under ``.perfbench/driver_floor/`` and Spark scratch under
@@ -121,6 +124,7 @@ def measure(workload: str, seed: int, scale: float) -> dict:
 
     bench.isolate_scratch()
     from simpletasks_data_spark.session import count_py4j_round_trips, get_spark
+    from spans import Tracer
 
     W = workloads.WORKLOADS[workload]
     work = os.path.join(bench.STATE, "driver_floor", workload)
@@ -144,11 +148,13 @@ def measure(workload: str, seed: int, scale: float) -> dict:
     W.reset(m)
     bench.settle(spark)
     me = threading.get_ident()
+    tracer = Tracer(spark)
     before, t0 = _snapshot(jvm), time.perf_counter()
-    with count_py4j_round_trips(spark) as counts:
+    with tracer.span("call") as span, count_py4j_round_trips(spark) as counts:
         out = W.call(spark, m, no_span)
     wall = time.perf_counter() - t0
     after = _snapshot(jvm)
+    tracer.collect([span])
     problems = W.check(m, out)
     bench.stop_spark(spark)
     return {
@@ -156,6 +162,9 @@ def measure(workload: str, seed: int, scale: float) -> dict:
         "wall_s": wall,
         "py4j_calling_thread": counts.get(me, 0),
         "py4j_other_threads": sum(n for t, n in counts.items() if t != me),
+        "spark_jobs": span["self"]["jobs"],
+        "spark_tasks": span["self"]["tasks"],
+        "shuffle_write_bytes": span["self"]["shuffle_write_bytes"],
         **_cpu_delta(before, after),
     }
 

@@ -2,17 +2,23 @@
 
 Mirrors ``/root/reference/simpletasks_data/importtask.py:379-395``:
 
-  pre_process -> read target snapshot -> fold sources IN ORDER (each a
-  merge step, §operators.merge) -> post_process -> apply-time validation
-  (non-nullable rejection) -> counters -> pre_commit -> atomic write (+
-  history append) unless dry-run -> post_commit -> result dict.
+  pre_process -> read target snapshot -> fold sources IN ORDER, pass by
+  pass (§operators.merge) -> post_process -> apply-time validation
+  (non-nullable rejection) and counters, observed on the last pass ->
+  pre_commit -> atomic write (+ history append) unless dry-run ->
+  post_commit -> result dict.
 
-Cross-source pending visibility (``importtask.py:136-150``): each merge
-step's output image becomes the next step's target side. Between steps the
-image is ``localCheckpoint``-ed — cutting lineage so the plan doesn't grow
-quadratically across sources and materializing pending state exactly once
-per source. (On a real cluster use ``spark.sparkContext.setCheckpointDir``
-+ reliable ``checkpoint``; localCheckpoint is the single-node analogue.)
+Cross-source pending visibility (``importtask.py:136-150``): inside a pass
+(consecutive sources sharing the key column and comparator, ended by a
+source with an ``on_data_not_found`` hook) each source's MERGE policy is a
+projection layer over the previous source's; a pass's output image becomes
+the next pass's target side. Each pass ends in one ``localCheckpoint`` —
+cutting lineage so the plan doesn't grow quadratically across passes, and
+materializing pending state once per pass; the last one also observes the
+apply-time counters (``rejected``, ``created``, ``updated``,
+``history_created``), so no separate aggregate runs. (On a real cluster use
+``spark.sparkContext.setCheckpointDir`` + reliable ``checkpoint``;
+localCheckpoint is the single-node analogue.)
 
 Dry-run (the reference's ``execute()`` gate, ``importtask.py:370``):
 compute the full merge plan and counter dict, skip both writes.
@@ -28,8 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..mapping import BoundMapping
-from ..operators.merge import CREATING, HIST, ORIG, finalize_image, init_image
-from ..operators.merge import merge_source, revert_rejected
+from ..operators.merge import CREATING, HIST, INVALID, ORIG, finalize_image, init_image
+from ..operators.merge import merge_source, passes
 from ..sources.base import Source, overrides
 from .history import HistorySpec, build_history
 from .target import TargetTable
@@ -121,27 +127,8 @@ class ImportJob:
         tracked = self._tracked_columns(bounds)
         image = init_image(self.get_model_data(), target_cols, tuple(tracked))
 
-        per_source = []
-        self.warnings = []
-        for source, bound in zip(sources, bounds):
-            self.progress("merge_source", source=source.name)
-            # per-source child logger, as the reference scopes its row-loop
-            # logging (importtask.py:206 ``self.logger.getChild(source.name)``)
-            slog = self.logger.getChild(source.name)
-            step = merge_source(self.spark, image, source, bound, target_cols)
-            # merge_source already checkpointed the merged frame; the image
-            # here is a thin projection over it (no re-execution).
-            image = step.image
-            per_source.append(step.counters)
-            self.warnings.append(step.warnings)
-            slog.info("merged: %s", step.counters)
-            for col, n in step.warnings.items():
-                slog.warning("%d warnings on column %s", n, col)
-        results["sources"] = per_source
-
-        results["postprocess"] = self.post_process()
-
-        # ---- apply-time validation (importtask.py:313-321) ---------------
+        # ---- apply-time validation (importtask.py:313-321), observed on
+        # the last pass's checkpoint ---------------------------------------
         creating = F.col(CREATING)
         changed_any = F.lit(False)
         for c in target_cols:
@@ -161,32 +148,50 @@ class ImportJob:
                 valid = valid & F.col(c).isNotNull()
         else:
             valid = F.coalesce(hook, F.lit(True))
-        invalid = pending & ~valid
 
-        # ---- final counters in one aggregate (importtask.py:346-377) -----
         # History fires when any per-(source,column) flag survived the folds
         # — not merely when a tracked column's value changed (the change
         # could have come from a source whose spec doesn't keep history).
         hist_changed = F.lit(False)
         for c in tracked:
             hist_changed = hist_changed | F.col(HIST + c)
-
-        agg = image.agg(
+        invalid = F.col(INVALID)
+        checks = (pending & ~valid, [
             F.count_if(invalid).alias("rejected"),
             F.count_if(~invalid & creating).alias("created"),
             F.count_if(~invalid & ~creating & changed_any).alias("updated"),
             F.count_if(
-                F.lit(self.keep_history and bool(tracked))
-                & ~invalid
-                & ~creating
-                & hist_changed
+                F.lit(self.keep_history and bool(tracked)) & ~invalid & ~creating & hist_changed
             ).alias("history_created"),
-        ).collect()[0]  # c: 1row
+        ])
 
-        # Rejected items: creating rows vanish, updated rows revert
-        # (importtask.py:319-321 — their pending updates are not applied).
-        if agg["rejected"]:
-            image = revert_rejected(image, invalid, target_cols)
+        per_source = []
+        self.warnings = []
+        groups = passes(sources, bounds)
+        for n, group in enumerate(groups):
+            for source, _ in group:
+                self.progress("merge_source", source=source.name)
+            # merge_source checkpoints the merged frame; the image here is a
+            # thin projection over it (no re-execution). The last pass also
+            # applies the checks and reverts the rows they reject
+            # (importtask.py:319-321).
+            step = merge_source(
+                self.spark, image, group, target_cols, checks if n == len(groups) - 1 else None
+            )
+            image = step.image
+            for (source, _), counters, warnings in zip(group, step.counters, step.warnings):
+                # per-source child logger, as the reference scopes its row-loop
+                # logging (importtask.py:206 ``self.logger.getChild(source.name)``)
+                slog = self.logger.getChild(source.name)
+                per_source.append(counters)
+                self.warnings.append(warnings)
+                slog.info("merged: %s", counters)
+                for col, cnt in warnings.items():
+                    slog.warning("%d warnings on column %s", cnt, col)
+        results["sources"] = per_source
+        totals = step.checks
+
+        results["postprocess"] = self.post_process()
 
         # ---- history CDC frame (plans/history.py) ------------------------
         if self.keep_history and tracked:
@@ -209,10 +214,8 @@ class ImportJob:
                 self.history_sink.overwrite(new_hist)
         results["postcommit"] = self.post_commit()
 
-        results["rejected"] = int(agg["rejected"])
-        results["updated"] = int(agg["updated"])
-        results["created"] = int(agg["created"])
-        results["history_created"] = int(agg["history_created"])
+        for k in ("rejected", "updated", "created", "history_created"):
+            results[k] = totals[k]
         return results
 
     @staticmethod

@@ -225,8 +225,14 @@ class OrderedCsvDataSource(DataSource):
 
 
 def register_datasources(spark) -> None:
-    """Idempotently register the engine's custom connectors."""
+    """Register the engine's custom connectors once per session: a second
+    registration would pickle and ship the class again and make Spark warn
+    that it replaced the source. Each session has its own registry, so a
+    new or foreign session registers on its first call."""
     try:
+        manager = spark._jsparkSession.sessionState().dataSourceManager()
+        if manager.dataSourceExists(OrderedCsvDataSource.name()):
+            return
         spark.dataSource.register(OrderedCsvDataSource)
     except Exception:
         # Already registered (re-registration raises on some versions) or

@@ -366,6 +366,79 @@ def test_source_hooks_assigned_on_the_instance_are_called(spark):
     assert out[3].col4 == "STALE"
 
 
+def test_pass_boundaries_four_sources(spark, monkeypatch):
+    """Four sources fold in three merge passes: a not-found hook ends the
+    first pass, and a source with another key comparator starts the third.
+    Every later source sees the earlier ones' pending state."""
+    from pyspark.sql import functions as F
+
+    from simpletasks_data_spark.plans import task
+
+    target_df = spark.createDataFrame(
+        [(1, "A", None, "c", None, None, None), (2, "B", None, "c", None, None, None)],
+        TARGET_SCHEMA,
+    )
+    target = TargetTable(schema=TARGET_SCHEMA, df=target_df, primary_keys=("id",), lengths=LENGTHS)
+
+    def mapping(*cols, comparator=None):
+        class M(Mapping):
+            def __init__(self):
+                super().__init__()
+                for c in ("id",) + cols:
+                    setattr(self, c, self.auto())
+
+            def get_header_line_number(self):
+                return -1
+
+            def get_key_column_comparator(self):
+                return comparator
+
+        return M()
+
+    class Flagging(GeneratorSource):
+        def on_data_not_found(self, not_found):
+            return not_found.withColumn("col4", F.lit("STALE"))
+
+    sources = [
+        # creates 3, updates 1; row 2 not found
+        GeneratorSource([["3", "C", "x"], ["1", "A", "y"]], mapping("col1", "col3"), name="s1"),
+        # updates 1; 9 is unknown; rows 2 and 3 not found and flagged
+        Flagging([["1", "u"], ["9", "z"]], mapping("col4"), mode=ImportMode.UPDATE, name="s2"),
+        # updates the created row 3 and the flagged row 2; one missing key
+        GeneratorSource([["3", "k3"], ["2", "f2"], ["", "q"]], mapping("col3"),
+                        mode=ImportMode.UPDATE, name="s3"),
+        # another key comparator: 2 exists, 4 is created once
+        GeneratorSource([["2", "Z", "q"], ["4", "D", "w"], ["4", "E", "v"]],
+                        mapping("col1", "col2", comparator=lambda k: k.cast("long")),
+                        mode=ImportMode.CREATE, name="s4"),
+    ]
+    pass_sizes = []
+    merge = task.merge_source
+    monkeypatch.setattr(
+        task, "merge_source",
+        lambda spark, image, group, *a: pass_sizes.append(len(group)) or merge(spark, image, group, *a),
+    )
+    job = ImportJob(spark, target, sources=sources, dryrun=True)
+    res = job.run()
+    assert pass_sizes == [2, 1, 1]
+
+    zero = dict.fromkeys(EXPECTED["sources"][0], 0)
+    assert res["sources"] == [
+        {**zero, "read": 2, "not_found": 1},
+        {**zero, "read": 1, "ignored_not_created": 1, "not_found": 2},
+        {**zero, "read": 2, "ignored_missing_id": 1, "not_found": 1},
+        {**zero, "read": 1, "ignored_not_updated": 2, "not_found": 2},
+    ]
+    assert (res["created"], res["updated"], res["rejected"]) == (2, 2, 0)
+    out = {r.id: (r.col1, r.col2, r.col3, r.col4) for r in job.result_df.collect()}
+    assert out == {
+        1: ("A", None, "y", "u"),
+        2: ("B", None, "f2", "STALE"),
+        3: ("C", None, "k3", "STALE"),
+        4: ("D", "w", None, None),
+    }
+
+
 def test_duplicate_create_policy_fold(spark):
     """Within-source duplicate keys on a CREATED row: the insert takes the
     FIRST occurrence's values for should_update=False columns, later
@@ -652,7 +725,8 @@ def test_merge_policy_matrix_matches_python_reference(spark):
     """Generalized randomized policy-matrix test (r7 verdict item 8):
     per-column policies (normal / should_update=False / only_if_null),
     custom comparators, and per-source ImportModes are all RANDOMIZED,
-    over TWO sequential sources (cross-source pending visibility), and
+    over two or three sequential sources (cross-source pending visibility
+    inside one merge pass: they share the key), and
     checked against a row-at-a-time Python loop transcribing the
     reference engine's semantics (importtask.py:225-297: pending-or-
     stored old value, comparator no-op skip, cancel back to the stored
@@ -852,12 +926,12 @@ def test_merge_policy_matrix_matches_python_reference(spark):
         st.lists(row_strat, max_size=8),
     )
 
-    @given(tgt_strat, src_strat, src_strat)
+    @given(tgt_strat, st.lists(src_strat, min_size=2, max_size=3))
     @settings(
         max_examples=int(os.environ.get("MERGE_FUZZ_EXAMPLES", "25")),
         deadline=None,
     )
-    def check(tgt, src1, src2):
+    def check(tgt, srcs):
         target_df = spark.createDataFrame(
             [(k, v["a"], v["b"], v["c"], v["d"]) for k, v in tgt.items()], schema
         )
@@ -868,13 +942,12 @@ def test_merge_policy_matrix_matches_python_reference(spark):
             sources=[
                 GeneratorSource([list(r) for r in s[4]], make_mapping(s[1], s[2], s[3]),
                                 mode=s[0], name=f"s{i}")
-                for i, s in enumerate((src1, src2))
+                for i, s in enumerate(srcs)
             ],
             keep_history=True,
             dryrun=True,
         )
         res = job.run()
-        srcs = [(s[0], s[1], s[2], s[3], s[4]) for s in (src1, src2)]
         want, created, updated, history_created, per_src, any_ci_a = reference(tgt, srcs)
 
         got = {
@@ -895,7 +968,7 @@ def test_merge_policy_matrix_matches_python_reference(spark):
         assert res["created"] == len(created)
         assert res["updated"] == updated
         assert res["history_created"] == history_created
-        for i in range(2):
+        for i in range(len(srcs)):
             for key, val in per_src[i].items():
                 assert res["sources"][i][key] == val, (i, key, res["sources"][i], per_src[i])
 

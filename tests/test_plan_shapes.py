@@ -200,6 +200,33 @@ def test_import_driver_floor_py4j_round_trips(spark):
     assert calls <= IMPORT_PY4J_CEILING, f"{calls} Py4J round trips"
 
 
+# Spark jobs of the same import (local[2]): 3 with both sources folded in
+# one pass (one aggregation of their rows, one shuffle of the target, the
+# checkpoint that also observes the apply-time counters); 10 with one pass
+# per source and a separate counter aggregate.
+IMPORT_JOB_CEILING = 3
+
+
+def test_import_spark_job_count(spark):
+    """The e2e two-source dry run runs at most ``IMPORT_JOB_CEILING``
+    Spark jobs, counted through a job group: one pass shuffles the
+    target once, and no counter needs an action of its own."""
+    from test_importjob_e2e import EXPECTED, make_job
+
+    sc = spark.sparkContext
+    group = "import-job-count"
+    job = make_job(spark)
+    sc.setJobGroup(group, "two-source import")
+    try:
+        res = job.run()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert res == EXPECTED
+    assert jobs <= IMPORT_JOB_CEILING, f"{jobs} Spark jobs"
+
+
 def test_passage_dedupe_two_exchanges(spark):
     """Ownership via a window over ONE seg_hash exchange + the final
     per-doc agg — a groupBy+join-back would re-shuffle the segment frame

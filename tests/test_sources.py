@@ -508,6 +508,27 @@ def test_ordered_csv_sizes_schema_without_a_job(spark, tmp_path):
     assert narrow.columns == ["_c0", "_c1", SRC_POS]
 
 
+def test_ordered_csv_registers_once_per_session(spark, tmp_path, monkeypatch):
+    """Loading CSV sources twice in one session registers ``ordered_csv``
+    at most once: a second registration re-pickles the class and makes
+    Spark warn that it replaced the source."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    (tmp_path / "a.csv").write_text("1,2\n")
+    manager = spark._jsparkSession.sessionState().dataSourceManager()
+    registered = manager.dataSourceExists("ordered_csv")
+    calls = []
+    register = DataSourceRegistration.register
+    monkeypatch.setattr(
+        DataSourceRegistration, "register", lambda self, ds: calls.append(ds) or register(self, ds)
+    )
+    for _ in range(2):
+        df = CsvSource(str(tmp_path), MappingA()).load_raw(spark)
+    assert len(calls) == (0 if registered else 1)
+    assert manager.dataSourceExists("ordered_csv")
+    assert [(r._c0, r._c1) for r in df.collect()] == [("1", "2")]
+
+
 def test_ordered_csv_packs_small_files_into_one_partition(spark, tmp_path, monkeypatch):
     """Whole small files share one read partition (one Python task), read
     in file order with the per-file ``_src_pos`` layout unchanged."""
