@@ -10,7 +10,8 @@ measures one more call (``perfbench/workloads.py``) and prints:
 
 - Py4J round trips: on the calling thread, and on the other Python
   threads (Py4J's finalizer thread, which releases Java objects the
-  driver dropped);
+  driver dropped); beside each, how many of them were reflection
+  lookups (a JVM class or member resolved by name, not a call);
 - CPU seconds of the Python driver;
 - CPU seconds of the JVM by thread group: executor task threads, the
   threads that serve Py4J commands (Py4J's Java side names them
@@ -161,7 +162,10 @@ def measure(workload: str, seed: int, scale: float) -> dict:
         "workload": workload, "seed": seed, "cores": n_cores, "correct": not problems,
         "wall_s": wall,
         "py4j_calling_thread": counts.get(me, 0),
+        "py4j_calling_thread_reflection": counts.reflection.get(me, 0),
         "py4j_other_threads": sum(n for t, n in counts.items() if t != me),
+        "py4j_other_threads_reflection":
+            sum(n for t, n in counts.reflection.items() if t != me),
         "spark_jobs": span["self"]["jobs"],
         "spark_tasks": span["self"]["tasks"],
         "shuffle_write_bytes": span["self"]["shuffle_write_bytes"],
@@ -192,7 +196,7 @@ def main() -> int:
         rows.append(json.loads(proc.stdout.strip().splitlines()[-1]))
     for k in rows[0]:
         cells = (f"{r[k]:.2f}" if isinstance(r[k], float) else str(r[k]) for r in rows)
-        print(f"{k:24}" + "".join(f"{c:>20}" for c in cells))
+        print(f"{k:32}" + "".join(f"{c:>20}" for c in cells))
     print(json.dumps(rows), flush=True)
     return 0
 

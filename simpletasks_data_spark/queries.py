@@ -1831,7 +1831,7 @@ FROM customer
 def csv_import_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's flagship use case end-to-end: export `customer` to a
     real CSV file (plans/export formatters), re-import it through CsvSource
-    (default Python-DataSource engine: exact file order + quoted records)
+    (default ordered csv.reader engine: exact file order + quoted records)
     with schema-inferred parsers and a header skip, merging into an EMPTY
     target — every row takes the CREATE branch. The oracle is the parse
     normalization of the original table (str(x) -> parse is lossless for

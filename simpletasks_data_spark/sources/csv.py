@@ -4,20 +4,20 @@ The reference streams ``csv.reader`` rows in file order; duplicate-key
 last-wins semantics and header skipping both depend on that order. Three
 strategies:
 
-- ``ordered=True, engine="datasource"`` (default): the Spark 4 Python
-  DataSource connector (``datasource.py``) — whole files read in order
-  with Python's ``csv.reader``, so multi-line quoted records parse exactly
-  like the reference (``importsource.py:167-170``), and ``_src_pos``
-  encodes (file, line) total order with no counting pass. Without
-  ``num_columns`` the connector sizes the schema from the first line
-  itself, with no Spark job. The scan runs in Python workers: one to
-  load the source, one to plan it, one per read partition (small files
-  share one), at about 0.3 CPU-s of worker set-up each.
+- ``ordered=True, engine="datasource"`` (default): the ordered scan of
+  ``ordered_csv.py`` — whole files read in order with Python's
+  ``csv.reader``, so multi-line quoted records parse exactly like the
+  reference (``importsource.py:167-170``), and ``_src_pos`` encodes
+  (file, line) total order with no counting pass. The driver plans the
+  read groups and sizes the schema (``num_columns``, or the first line)
+  with no Spark job; the read is one ``mapInArrow`` task per group
+  (small files share one). The engine keeps the name of the Python
+  DataSource connector it replaced.
 - ``ordered=True, engine="rdd"``: read lines as a Hadoop text RDD —
   ``getSplits`` returns splits in (file, offset) order and ``zipWithIndex``
   counts per split, so the index IS the file line order — then parse each
   line JVM-side with ``from_csv``. No multi-line quoted records (documented
-  divergence); useful when the DataSource API is unavailable.
+  divergence); useful for Hadoop URIs, which Python's ``open()`` cannot read.
 - ``ordered=False``: plain ``spark.read.csv`` + ``monotonically_increasing_id``.
   Order is only partition-stable — fine when keys are unique or when an
   explicit ``order_col`` in the data provides the real ordering. This is the
@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..mapping import Mapping
+from . import ordered_csv
 from .base import SRC_POS, ImportMode, Source
 
 
@@ -56,7 +57,7 @@ class CsvSource(Source):
         splittable: bool = False,
     ) -> None:
         """``engine`` (for ordered reads): ``"datasource"`` (default) = the
-        Spark 4 Python DataSource connector (``datasource.py``) — exact
+        driver-planned ``csv.reader`` scan (``ordered_csv.py``) — exact
         file order plus correct multi-line quoted records, matching the
         reference's ``csv.reader``; ``"rdd"`` = text RDD + ``from_csv``
         per line (no multi-line records).
@@ -64,7 +65,7 @@ class CsvSource(Source):
         ``splittable`` (datasource engine only): byte-range-split each
         file on line boundaries so one large file reads on every core;
         the total order is preserved, but multi-line quoted records are
-        NOT supported on this path (see ``datasource.py`` module doc) —
+        NOT supported on this path (see ``ordered_csv.py`` module doc) —
         leave False for files that may contain them."""
         super().__init__(mapping, mode=mode, name=name)
         self.path = path
@@ -86,20 +87,10 @@ class CsvSource(Source):
 
     def load_raw(self, spark: SparkSession) -> DataFrame:
         if self.ordered and self.engine == "datasource":
-            from .datasource import register_datasources
-
-            register_datasources(spark)
-            reader = (
-                spark.read.format("ordered_csv")
-                .option("path", self.path)
-                .option("delimiter", self.delimiter)
-                .option("quote", self.quote)
-                .option("encoding", self.encoding.lower())
-                .option("splittable", "true" if self.splittable else "false")
+            return ordered_csv.scan(
+                spark, self.path, self.num_columns, self.delimiter, self.quote,
+                self.encoding, self.splittable,
             )
-            if self.num_columns is not None:
-                reader = reader.option("ncols", str(self.num_columns))
-            return reader.load()
         schema = self._csv_schema(spark)
         opts = {"delimiter": self.delimiter, "quote": self.quote, "mode": "PERMISSIVE"}
         if self.ordered:

@@ -4,7 +4,7 @@ The oracle is the ORIGINAL in-memory random table: python's csv.writer
 guarantees writerow/reader roundtrip, so after writing random cells
 (quotes, delimiters, newlines, unicode, tabs, empties) to disk, every
 engine path must hand back exactly those cells in exactly file-then-line
-order. This pins the connector plumbing — partition listing, _src_pos
+order. This pins the scan plumbing — read-group planning, _src_pos
 total-order encoding, ncols truncate/pad, Arrow transfer of arbitrary
 unicode — independently of the fixed fixtures in test_sources.py.
 Reference contract: csv.reader file-order streaming
@@ -144,14 +144,13 @@ def test_rdd_engine_roundtrip_fuzz(spark, tmp_path):
         assert got == want, (trial, got, want)
 
 
-def test_splittable_matches_perfile_fuzz(spark, tmp_path):
+def test_splittable_matches_perfile_fuzz(spark, tmp_path, monkeypatch):
     # splittable mode must reproduce the per-file read EXACTLY (same
     # cells, same order) for any no-multiline CSV at any split size —
     # including boundaries inside quoted cells, on '\r' of a '\r\n',
     # or mid multi-byte UTF-8 (0x0A never occurs inside a sequence)
-    from simpletasks_data_spark.sources.datasource import register_datasources
+    from simpletasks_data_spark.sources import ordered_csv
 
-    register_datasources(spark)
     rng = random.Random(8861)
     for trial in range(8):
         d = tmp_path / f"s{trial}"
@@ -160,21 +159,15 @@ def test_splittable_matches_perfile_fuzz(spark, tmp_path):
             rows = _rand_table(rng, LINE_ALPHABET, max_cols=4)
             _write(d / f"f{fi}.csv", rows)
         ncols = 4
-        base = (
-            spark.read.format("ordered_csv")
-            .option("path", str(d))
-            .option("ncols", str(ncols))
-        )
-        perfile = [
-            tuple(r[f"_c{i}"] for i in range(ncols))
-            for r in base.load().orderBy(SRC_POS).collect()
-        ]
-        split = [
-            tuple(r[f"_c{i}"] for i in range(ncols))
-            for r in base.option("splittable", "true")
-            .option("split_size", str(rng.randrange(4, 64)))
-            .load()
-            .orderBy(SRC_POS)
-            .collect()
-        ]
+
+        def read(splittable):
+            src = CsvSource(str(d), _mapping(ncols), num_columns=ncols, splittable=splittable)
+            return [
+                tuple(r[f"_c{i}"] for i in range(ncols))
+                for r in src.load_raw(spark).orderBy(SRC_POS).collect()
+            ]
+
+        perfile = read(False)
+        monkeypatch.setattr(ordered_csv, "_SPLIT_BYTES", rng.randrange(4, 64))
+        split = read(True)
         assert split == perfile, (trial, split, perfile)

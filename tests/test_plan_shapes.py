@@ -177,9 +177,82 @@ def test_session_turns_off_call_site_capture(spark):
     assert err.value.getCondition().startswith("UNRESOLVED_COLUMN")
 
 
-# Calling-thread Py4J round trips of one import below: 2,411 measured with
-# call-site capture off and the default hooks skipped, 11,276 before.
-IMPORT_PY4J_CEILING = 2770
+def _col_round_trips(spark):
+    """Calling-thread Py4J round trips of one warm ``F.col``."""
+    import threading
+
+    from pyspark.sql import functions as F
+
+    from simpletasks_data_spark.session import count_py4j_round_trips
+
+    F.col("warm")
+    with count_py4j_round_trips(spark) as counts:
+        F.col("x")
+    return counts.get(threading.get_ident(), 0)
+
+
+def test_session_resolves_jvm_entry_points(spark):
+    """After ``get_spark`` a Column function is one Py4J round trip, the
+    call itself: the class and method lookups (3 round trips without the
+    pre-resolved entry points) are not repeated."""
+    assert _col_round_trips(spark) == 1
+
+
+_RESTART_PROBE = """
+import json, sys
+sys.path[:0] = [sys.argv[1], sys.argv[2]]
+from pyspark import SparkContext
+from pyspark.sql import SparkSession
+from simpletasks_data_spark.session import get_spark, pin_session_confs
+from test_plan_shapes import _col_round_trips
+
+out = {}
+spark = get_spark(master="local[1]", shuffle_partitions=1)
+spark.stop()
+spark = get_spark(master="local[1]", shuffle_partitions=1)
+out["restarted"] = _col_round_trips(spark)
+# a new gateway, as when a JVM is torn down between runs
+spark.stop()
+SparkContext._gateway.shutdown()
+SparkContext._gateway = SparkContext._jvm = None
+spark = (
+    SparkSession.builder.master("local[1]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+    .getOrCreate()
+)
+out["foreign"] = _col_round_trips(spark)
+pin_session_confs(spark)
+out["foreign_pinned"] = _col_round_trips(spark)
+spark.stop()
+print(json.dumps(out))
+"""
+
+
+def test_entry_points_survive_restart_and_reach_foreign_sessions():
+    """In a fresh process: a stopped and rebuilt ``get_spark`` session
+    keeps the one-round-trip ``F.col``; a session built on a new gateway
+    without ``get_spark`` pays the lookups (3) until
+    ``pin_session_confs`` resolves its entry points (1). The foreign
+    session turns call-site capture off, which costs round trips of its
+    own (see the ``session`` module docstring)."""
+    import json
+    import subprocess
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    proc = subprocess.run(
+        [sys.executable, "-c", _RESTART_PROBE, os.path.dirname(here), here],
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out == {"restarted": 1, "foreign": 3, "foreign_pinned": 1}
+
+
+# Calling-thread Py4J round trips of one import below: 1,125 measured as
+# the first import of a fresh session (1,102 warm) with the JVM entry
+# points pre-resolved, 2,030-2,036 before; 11,276 with call-site capture.
+IMPORT_PY4J_CEILING = 1230
 
 
 def test_import_driver_floor_py4j_round_trips(spark):

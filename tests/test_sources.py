@@ -72,55 +72,68 @@ def test_table_source(spark):
     assert out[9].col1 == "R"
 
 
-def test_ordered_csv_datasource(spark, tmp_path):
-    """Spark 4 Python DataSource connector: exact file order, multiline
-    quoted records (which the per-line from_csv path cannot handle)."""
+def test_ordered_csv_datasource(spark, tmp_path, monkeypatch):
+    """The ordered CSV scan: exact file order, multiline quoted records
+    (which the per-line from_csv path cannot handle). With
+    ``maxRecordsPerBatch`` at 3, a 10-row file reads back the same rows
+    and positions, and the scan yields no batch over 3 rows."""
     import os
 
-    from simpletasks_data_spark.sources.datasource import register_datasources
+    import pyarrow as pa
 
     p = os.path.join(tmp_path, "multi.csv")
     with open(p, "w", encoding="utf-8") as f:
         f.write('id,note\n')
         f.write('1,"line one\nline two"\n')
         f.write('2,plain\n')
-    register_datasources(spark)
-    df = (
-        spark.read.format("ordered_csv")
-        .option("path", p)
-        .option("ncols", "2")
-        .load()
-        .orderBy("_src_pos")
-    )
+    df = CsvSource(p, MappingA(), num_columns=2).load_raw(spark).orderBy("_src_pos")
     rows = df.collect()
     assert [r._src_pos for r in rows] == [0, 1, 2]
     assert rows[1]._c1 == "line one\nline two"  # multiline quoted record
     assert rows[2]._c0 == "2"
 
+    ten = os.path.join(tmp_path, "ten.csv")
+    with open(ten, "w", encoding="utf-8") as f:
+        f.writelines(f'{i},"v\n{i}"\n' for i in range(10))
+    want = [(str(i), f"v\n{i}", i) for i in range(10)]
+    read = lambda: [  # noqa: E731
+        (r._c0, r._c1, r._src_pos)
+        for r in CsvSource(ten, MappingA(), num_columns=2).load_raw(spark)
+        .orderBy("_src_pos").collect()
+    ]
+    assert read() == want
+    frame = type(spark.range(1))
+    map_in_arrow, scans = frame.mapInArrow, []
+    monkeypatch.setattr(
+        frame, "mapInArrow", lambda self, f, *a, **k: scans.append(f) or map_in_arrow(self, f, *a, **k)
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    spark.conf.set(key, "3")
+    try:
+        assert read() == want
+    finally:
+        spark.conf.unset(key)
+    ids = pa.RecordBatch.from_arrays([pa.array([0], pa.int64())], names=["id"])
+    batches = list(scans[-1](iter([ids])))
+    assert [b.num_rows for b in batches] == [3, 3, 3, 1]
+    got = [r for b in batches for r in zip(*(c.to_pylist() for c in b.columns))]
+    assert got == want
+
 
 def test_ordered_csv_datasource_multifile(spark, tmp_path):
     import os
 
-    from simpletasks_data_spark.sources.datasource import register_datasources
-
     for i, name in enumerate(["a.csv", "b.csv"]):
         with open(os.path.join(tmp_path, name), "w", encoding="utf-8") as f:
             f.write(f"{i}0\n{i}1\n")
-    register_datasources(spark)
-    df = (
-        spark.read.format("ordered_csv")
-        .option("path", str(tmp_path))
-        .option("ncols", "1")
-        .load()
-        .orderBy("_src_pos")
-    )
+    df = CsvSource(str(tmp_path), MappingA(), num_columns=1).load_raw(spark).orderBy("_src_pos")
     vals = [r._c0 for r in df.collect()]
     assert vals == ["00", "01", "10", "11"]  # file order then line order
 
 
 def test_csv_source_datasource_engine(spark, tmp_path):
     """CsvSource(engine='datasource') runs the full import through the
-    Python DataSource connector."""
+    ordered ``csv.reader`` scan."""
     import os
 
     p = os.path.join(tmp_path, "src2.csv")
@@ -442,30 +455,23 @@ def test_fixed_width_source_slices_trims_and_merges(spark, tmp_path):
     assert res["created"] == 3
 
 
-def test_ordered_csv_datasource_splittable(spark, tmp_path):
+def test_ordered_csv_datasource_splittable(spark, tmp_path, monkeypatch):
     """Byte-range splits (VERDICT r10 item 2): a single file torn into
     many line-aligned splits must come back in exact file order with
     strictly increasing positions, and quoted-comma cells must survive
     a boundary landing anywhere (no multi-line records on this path)."""
     import os
 
-    from simpletasks_data_spark.sources.datasource import (
-        OrderedCsvReader,
-        register_datasources,
-    )
+    from simpletasks_data_spark.sources import ordered_csv
 
     p = os.path.join(tmp_path, "big.csv")
     with open(p, "w", encoding="utf-8", newline="") as f:
         for i in range(500):
             f.write(f'{i},"v,{i}",tail{i}\r\n')
-    register_datasources(spark)
+    monkeypatch.setattr(ordered_csv, "_SPLIT_BYTES", 256)  # ~tens of splits over this file
     df = (
-        spark.read.format("ordered_csv")
-        .option("path", p)
-        .option("ncols", "3")
-        .option("splittable", "true")
-        .option("split_size", "256")  # ~tens of splits over this file
-        .load()
+        CsvSource(p, MappingA(), num_columns=3, splittable=True)
+        .load_raw(spark)
         .orderBy("_src_pos")
     )
     rows = df.collect()
@@ -474,10 +480,7 @@ def test_ordered_csv_datasource_splittable(spark, tmp_path):
     pos = [r._src_pos for r in rows]
     assert pos == sorted(pos) and len(set(pos)) == 500
     # the planner really did split the file
-    reader = OrderedCsvReader(
-        {"path": p, "splittable": "true", "split_size": "256"}, 3
-    )
-    assert len(reader.partitions()) > 10
+    assert len(ordered_csv.plan_groups(p, splittable=True)) > 10
     # split 0 carries the dense 0..N prefix the header-skip gate needs
     assert pos[:3] == [0, 1, 2]
 
@@ -508,46 +511,38 @@ def test_ordered_csv_sizes_schema_without_a_job(spark, tmp_path):
     assert narrow.columns == ["_c0", "_c1", SRC_POS]
 
 
-def test_ordered_csv_registers_once_per_session(spark, tmp_path, monkeypatch):
-    """Loading CSV sources twice in one session registers ``ordered_csv``
-    at most once: a second registration re-pickles the class and makes
-    Spark warn that it replaced the source."""
-    from pyspark.sql.datasource import DataSourceRegistration
-
-    (tmp_path / "a.csv").write_text("1,2\n")
-    manager = spark._jsparkSession.sessionState().dataSourceManager()
-    registered = manager.dataSourceExists("ordered_csv")
-    calls = []
-    register = DataSourceRegistration.register
-    monkeypatch.setattr(
-        DataSourceRegistration, "register", lambda self, ds: calls.append(ds) or register(self, ds)
-    )
-    for _ in range(2):
-        df = CsvSource(str(tmp_path), MappingA()).load_raw(spark)
-    assert len(calls) == (0 if registered else 1)
-    assert manager.dataSourceExists("ordered_csv")
-    assert [(r._c0, r._c1) for r in df.collect()] == [("1", "2")]
+def test_ordered_csv_loads_on_a_second_session(spark, tmp_path):
+    """A CSV load works on ``spark.newSession()`` after one on the first
+    session: the scan needs no per-session registration."""
+    (tmp_path / "a.csv").write_text("1,2\n3,4\n")
+    read = lambda s: [  # noqa: E731
+        tuple(r) for r in CsvSource(str(tmp_path), MappingA()).load_raw(s).orderBy(SRC_POS).collect()
+    ]
+    first = read(spark)
+    assert first == [("1", "2", 0), ("3", "4", 1)]
+    other = spark.newSession()
+    assert read(other) == first
+    assert read(other) == first
 
 
 def test_ordered_csv_packs_small_files_into_one_partition(spark, tmp_path, monkeypatch):
     """Whole small files share one read partition (one Python task), read
     in file order with the per-file ``_src_pos`` layout unchanged."""
-    from simpletasks_data_spark.sources import datasource
+    from simpletasks_data_spark.sources import ordered_csv
 
     for i in range(3):
         (tmp_path / f"f{i}.csv").write_text(f"{i}a,x\n{i}b,y\n")
-    opts = {"path": str(tmp_path)}
-    parts = datasource.OrderedCsvReader(opts, 2).partitions()
+    parts = ordered_csv.plan_groups(str(tmp_path))
     assert len(parts) == 1
     df = CsvSource(str(tmp_path), MappingA()).load_raw(spark)
     got = [(r._c0, r[SRC_POS]) for r in df.orderBy(SRC_POS).collect()]
     assert got == [(f"{i}{c}", (i << 40) | j) for i in range(3) for j, c in enumerate("ab")]
 
     # a cap of two files' size splits the group, still in file order
-    monkeypatch.setattr(datasource, "_PACK_BYTES", 20)
-    split = datasource.OrderedCsvReader(opts, 2).partitions()
+    monkeypatch.setattr(ordered_csv, "_PACK_BYTES", 20)
+    split = ordered_csv.plan_groups(str(tmp_path))
     assert [[i for i, _ in p.files] for p in split] == [[0, 1], [2]]
-    per_part = [row for p in split for row in datasource.OrderedCsvReader(opts, 2).read(p)]
+    per_part = [row for p in split for row in ordered_csv.read_group(p, 2)]
     assert [(c0, pos) for c0, _, pos in per_part] == got
 
 
@@ -555,11 +550,11 @@ def test_ordered_csv_keeps_medium_files_one_partition_each(tmp_path):
     """Files too big to pair under the packing cap keep one read
     partition (one Python task) each, so a directory of medium files
     still scans on every core."""
-    from simpletasks_data_spark.sources import datasource
+    from simpletasks_data_spark.sources import ordered_csv
 
-    half = datasource._PACK_BYTES // 2 + 1
+    half = ordered_csv._PACK_BYTES // 2 + 1
     for i in range(3):
         (tmp_path / f"f{i}.csv").write_bytes(b"a,b\n" * (half // 4 + 1))
     (tmp_path / "f3.csv").write_text("a,b\n")
-    parts = datasource.OrderedCsvReader({"path": str(tmp_path)}, 2).partitions()
+    parts = ordered_csv.plan_groups(str(tmp_path))
     assert [[i for i, _ in p.files] for p in parts] == [[0], [1], [2, 3]]
