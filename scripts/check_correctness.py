@@ -2,8 +2,8 @@
 entry AND its oracle_sql() side-by-side at sf0.01, compare row count,
 column names, and values (sorted columns, sorted rows, stringified).
 Usage: python scripts/check_correctness.py [sf_dir] [query ...]"""
-import sys, math
-sys.path.insert(0, "/root/repo")
+import os, sys, math
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as e
 from simpletasks_data_spark.session import get_spark
 from tests.oracle_harness import dtype_kind_mismatches

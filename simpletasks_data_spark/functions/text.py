@@ -5,6 +5,29 @@ quality scoring, n-gram heuristic language ID, and content fingerprints.
 Normalization is deliberately simple (lowercase, strip non-alphanumerics)
 and defined once so every operator — and the external SQL oracles — share
 the exact same token stream.
+
+Tokenize once. Every function that reads tokens (``token_count``,
+``distinct_token_count``, ``stopword_ratio``, ``mean_token_len``,
+``quality_score``, ``lang_scores``, ``lang_id``, ``fingerprint``,
+``token_ngrams``, ``repetition_signals``) takes the token array, not the
+text: the caller projects ``tokens(text)`` to a column once and passes
+that column (``token_count``, ``distinct_token_count`` and
+``fingerprint`` read their input once, so ``tokens(text)`` itself is
+fine there). ``punct_ratio`` reads characters and takes the text. Two
+Catalyst facts make this the contract:
+
+- Repeated sub-trees are not shared in the plan, and expressions inside
+  higher-order-function lambdas are not common-subexpression-eliminated
+  at all, so each ``tokens(text)`` inside an expression is one more copy
+  of the regex chain, evaluated per row (``lang_id`` reads its input in
+  every score). ``CollapseProject`` does not inline a
+  non-cheap alias that its consumer references more than once, so a
+  projected ``toks`` column stays one evaluation per row.
+- A filter on a derived column is pushed below the projection that
+  defines it, with the aliases substituted in: a filter on ``lang``
+  next to its projection copies the whole language-ID tree, tokenizer
+  included, into the pushed-down filter. Filter on columns that are
+  cheap to recompute, or after a shuffle that materializes the column.
 """
 
 from __future__ import annotations
@@ -63,12 +86,12 @@ def tokens(col: Column | str) -> Column:
     return F.filter(F.split(normalize_text(col), " "), lambda x: x != "")
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokens(col))
+def token_count(toks: Column | str) -> Column:
+    return F.size(_c(toks))
 
 
-def distinct_token_count(col: Column | str) -> Column:
-    return F.size(F.array_distinct(tokens(col)))
+def distinct_token_count(toks: Column | str) -> Column:
+    return F.size(F.array_distinct(_c(toks)))
 
 
 def token_ngrams(toks: Column | str, n: int) -> Column:
@@ -152,53 +175,58 @@ def punct_ratio(col: Column | str) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def stopword_ratio(col: Column | str) -> Column:
-    toks = tokens(col)
-    stops = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS_EN)))
-    return F.when(F.size(toks) > 0, stops.cast("double") / F.size(toks)).otherwise(F.lit(0.0))
+def stopword_ratio(toks: Column | str) -> Column:
+    t = _c(toks)
+    stops = F.size(F.filter(t, lambda x: x.isin(*STOPWORDS_EN)))
+    return F.when(F.size(t) > 0, stops.cast("double") / F.size(t)).otherwise(F.lit(0.0))
 
 
-def mean_token_len(col: Column | str) -> Column:
-    toks = tokens(col)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(F.size(toks) > 0, total.cast("double") / F.size(toks)).otherwise(F.lit(0.0))
+def mean_token_len(toks: Column | str) -> Column:
+    t = _c(toks)
+    total = F.aggregate(t, F.lit(0), lambda acc, x: acc + F.length(x))
+    return F.when(F.size(t) > 0, total.cast("double") / F.size(t)).otherwise(F.lit(0.0))
 
 
-def quality_score(col: Column | str) -> Column:
+def quality_score(toks: Column | str, text: Column | str) -> Column:
     """Heuristic [0,1] quality: enough tokens, sane mean word length, some
     stopwords, little punctuation. Mirrors the shape of common LLM-corpus
-    quality filters (length/punct/stopword gates) as one score."""
-    tc = token_count(col).cast("double")
+    quality filters (length/punct/stopword gates) as one score. ``toks``
+    is the token array of ``text``; the punctuation term reads ``text``."""
+    tc = token_count(toks).cast("double")
     len_ok = F.least(tc / F.lit(20.0), F.lit(1.0))
-    mtl = mean_token_len(col)
+    mtl = mean_token_len(toks)
     mtl_ok = F.when((mtl >= 3) & (mtl <= 10), F.lit(1.0)).otherwise(F.lit(0.5))
-    stop_ok = F.least(stopword_ratio(col) * 4, F.lit(1.0))
-    punct_ok = F.lit(1.0) - F.least(punct_ratio(col) * 4, F.lit(1.0))
+    stop_ok = F.least(stopword_ratio(toks) * 4, F.lit(1.0))
+    punct_ok = F.lit(1.0) - F.least(punct_ratio(text) * 4, F.lit(1.0))
     return F.round((len_ok + mtl_ok + stop_ok + punct_ok) / 4, 4)
 
 
-def lang_scores(col: Column | str) -> list[tuple[str, Column]]:
-    toks = tokens(col)
+def lang_scores(toks: Column | str) -> list[tuple[str, Column]]:
+    t = _c(toks)
     out = []
     for lang, lex in LANG_LEXICONS.items():
-        hits = F.size(F.filter(toks, lambda t: t.isin(*lex)))
-        score = F.when(F.size(toks) > 0, hits.cast("double") / F.size(toks)).otherwise(F.lit(0.0))
+        hits = F.size(F.filter(t, lambda x: x.isin(*lex)))
+        score = F.when(F.size(t) > 0, hits.cast("double") / F.size(t)).otherwise(F.lit(0.0))
         out.append((lang, score))
     return out
 
 
-def lang_id(col: Column | str) -> Column:
+def lang_id(toks: Column | str) -> Column:
     """argmax language by lexicon hit-rate; 'und' when no hits. Ties break
-    by the fixed lexicon order (en, fr, de, es)."""
-    scores = lang_scores(col)
-    best_score = F.greatest(*[s for _, s in scores])
-    expr = F.lit("und")
-    for lang, score in reversed(scores):
-        expr = F.when((best_score > 0) & (score == best_score), F.lit(lang)).otherwise(expr)
-    return expr
+    by the fixed lexicon order (en, fr, de, es). One ``greatest`` over
+    ``(score, rank, lang)`` structs, rank falling in lexicon order, so
+    each score appears once; an ``(0.0, top rank, 'und')`` entry wins
+    whenever the best score is 0 (scores are never negative)."""
+    scores = [("und", F.lit(0.0))] + lang_scores(toks)
+    return F.greatest(
+        *[
+            F.struct(s.alias("score"), F.lit(-i).alias("rank"), F.lit(lang).alias("lang"))
+            for i, (lang, s) in enumerate(scores)
+        ]
+    )["lang"]
 
 
-def fingerprint(col: Column | str) -> Column:
+def fingerprint(toks: Column | str) -> Column:
     """Content fingerprint: md5 of the sorted distinct token set — robust to
     token order and duplication (bag-of-words identity)."""
-    return F.md5(F.concat_ws(" ", F.sort_array(F.array_distinct(tokens(col)))))
+    return F.md5(F.concat_ws(" ", F.sort_array(F.array_distinct(_c(toks)))))

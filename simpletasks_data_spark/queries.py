@@ -683,13 +683,13 @@ FROM t
 """)
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    return docs.select(
+    return docs.select("doc_id", "text", TX.tokens("text").alias("toks")).select(
         "doc_id",
-        TX.token_count("text").cast("long").alias("n_tokens"),
-        TX.distinct_token_count("text").cast("long").alias("n_distinct"),
-        F.round(TX.mean_token_len("text"), 4).alias("mean_token_len"),
+        TX.token_count("toks").cast("long").alias("n_tokens"),
+        TX.distinct_token_count("toks").cast("long").alias("n_distinct"),
+        F.round(TX.mean_token_len("toks"), 4).alias("mean_token_len"),
         F.round(TX.punct_ratio("text"), 4).alias("punct_ratio"),
-        F.round(TX.stopword_ratio("text"), 4).alias("stopword_ratio"),
+        F.round(TX.stopword_ratio("toks"), 4).alias("stopword_ratio"),
     )
 
 
@@ -719,10 +719,8 @@ SELECT doc_id, labeled_lang, {pick} AS detected_lang FROM s
 def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     return docs.select(
-        "doc_id",
-        F.col("lang").alias("labeled_lang"),
-        TX.lang_id("text").alias("detected_lang"),
-    )
+        "doc_id", F.col("lang").alias("labeled_lang"), TX.tokens("text").alias("toks")
+    ).select("doc_id", "labeled_lang", TX.lang_id("toks").alias("detected_lang"))
 
 
 @register("text_fingerprint", f"""
@@ -732,7 +730,14 @@ FROM documents
 """)
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    return docs.select("doc_id", TX.fingerprint("text").alias("fingerprint"))
+    return docs.select("doc_id", TX.fingerprint(TX.tokens("text")).alias("fingerprint"))
+
+
+def _quality(docs: DataFrame) -> DataFrame:
+    """``(doc_id, quality)`` of each document, tokenized once."""
+    return docs.select("doc_id", "text", TX.tokens("text").alias("toks")).select(
+        "doc_id", TX.quality_score("toks", "text").alias("quality")
+    )
 
 
 @register("text_quality", f"""
@@ -763,8 +768,7 @@ SELECT doc_id,
 FROM m
 """)
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    return docs.select("doc_id", TX.quality_score("text").alias("quality"))
+    return _quality(load(spark, sf_dir, "documents"))
 
 
 @register("text_repetition", f"""
@@ -3357,8 +3361,7 @@ def weighted_sample_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     probability equal to its quality score, via the portable-hash
     Bernoulli trick (no rand(), reproducible at any cluster size).
     Map-only: filter fused into the scan projection, no shuffle."""
-    docs = load(spark, sf_dir, "documents")
-    scored = docs.select("doc_id", TX.quality_score("text").alias("quality"))
+    scored = _quality(load(spark, sf_dir, "documents"))
     return CP.weighted_sample(scored, F.col("quality"), F.col("doc_id"))
 
 
@@ -17016,29 +17019,32 @@ def pipeline_pretraining_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
       -> deterministic hash split (train/val/test)
       -> per-(lang, split) doc and token accounting.
 
-    Every stage is map-shaped or one agg/join: tokens/langid/fingerprint
-    are projections, dedup is a fingerprint-partitioned window, the
+    Every stage is map-shaped or one agg/join: the text is tokenized
+    once, langid/fingerprint are projections of that token array, dedup
+    is a fingerprint-partitioned window (which also drops 'und'), the
     decontamination join broadcasts the benchmark gram set (the corpus
     side never shuffles on shingles), the split is a portable md5
     bucket. At 100 TB this is the same plan with bigger scans — no stage
     holds per-corpus state. The oracle recomputes the whole chain from
     the proven stage fragments."""
-    # NOTE (r11, ab_metrics): a round-robin _ensure_parallelism spread
-    # here MULTIPLIED total work ~17x (2.3 -> 40 executor-CPU-s) — the
-    # exchange splits the collapsed projection so the HOF-heavy
-    # expressions (tokens/langid/fingerprint) lose common-subexpression
-    # reuse and re-evaluate per consumer. The plan cut below is the
-    # right fix; the single-task scan stage is a test-SF row-group
-    # artifact (at scale the scan has >= cores partitions).
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     base = docs.select(
         "doc_id", "text", TX.tokens("text").alias("toks")
     ).withColumn("n_tokens", F.size("toks").cast("long"))
     bench = docs.where(F.col("doc_id") % 20 == 0)
     cand = base.where((F.col("doc_id") % 20 != 0) & (F.col("n_tokens") >= 3))
-    lang = cand.withColumn("lang", TX.lang_id("text")).where(F.col("lang") != "und")
-    fp = lang.withColumn("fpr", TX.fingerprint("text"))
+    fp = cand.withColumns({"lang": TX.lang_id("toks"), "fpr": TX.fingerprint("toks")})
     w = Window.partitionBy("fpr").orderBy("doc_id")
+    # The 'und' rows are dropped AFTER the dedup window, not before it: a
+    # filter on ``lang`` next to its projection is pushed below it with the
+    # language-ID tree substituted in (see ``functions/text.py``). This is
+    # exact. A document is 'und' iff none of its tokens is in any lexicon,
+    # which depends only on its distinct token set; ``fpr`` is the md5 of
+    # that set joined by spaces, so (barring an md5 collision) every
+    # fingerprint group is all 'und' or has no 'und' document, and keeping
+    # the group's first row and then dropping 'und' keeps the same rows as
+    # dropping 'und' first. The 'und' rows do cross the window's exchange.
+    #
     # Cut the plan once (r11, ab_metrics): ``dd`` feeds BOTH the
     # decontamination join and the survivors anti-join, and without a
     # checkpoint the whole scan -> tokens -> langid -> fingerprint ->
@@ -17046,7 +17052,7 @@ def pipeline_pretraining_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parquet scans / 12 Windows in the physical plan).
     dd = (
         fp.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
+        .where((F.col("_rn") == 1) & (F.col("lang") != "und"))
         .localCheckpoint(eager=False)
     )
     dec = CP.decontaminate(
@@ -19819,7 +19825,7 @@ def mixture_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream runs on the source-bounded frame."""
     s = (
         load(spark, sf_dir, "documents")
-        .select("source", TX.token_count("text").cast("long").alias("nt"))
+        .select("source", TX.token_count(TX.tokens("text")).cast("long").alias("nt"))
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -19884,7 +19890,7 @@ def doclen_percentile_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     bottom-k sketch (sketch_sample_quantiles) — this is the exact
     ground-truth twin."""
     t = load(spark, sf_dir, "documents").select(
-        "doc_id", "source", TX.token_count("text").alias("n_tok")
+        "doc_id", "source", TX.token_count(TX.tokens("text")).alias("n_tok")
     )
     w = Window.partitionBy("source").orderBy("n_tok", "doc_id")
     r = t.select(

@@ -39,15 +39,19 @@ The engine targets a 1000-executor cluster reading ~100 TB; locally we run
   name and then the method (``Class.getMethods`` copies every method
   of the class), and for each JVM Seq it looks up ``PythonUtils``; a
   short name first misses on every imported package, and each miss
-  scans the classpath. ``_resolve_entry_points`` puts a handle for
-  ``functions``, ``PythonUtils`` and ``PythonSQLUtils`` (full and short
-  names) in the gateway ``JVMView``'s instance dict, where Python's
-  attribute lookup finds it first, and each handle keeps the methods it
-  has looked up. A warm ``F.col`` then costs 1 Py4J round trip instead
-  of 3, and a warm ``merge_incremental`` benchmark call 1,336
-  calling-thread round trips instead of 2,446, of which 30 instead of
-  1,152 are reflection lookups (``scripts/driver_floor.py``, seed 1).
-  ``get_spark`` and ``pin_session_confs`` both install them.
+  scans the classpath. ``SparkSession.getActiveSession`` looks up
+  ``org.apache.spark.sql.classic.SparkSession`` the same way, and
+  call-site capture ``PySparkCurrentOrigin``. ``_resolve_entry_points``
+  puts a handle for each of ``_ENTRY_POINTS`` (full and short names) in
+  the gateway ``JVMView``'s instance dict, where Python's attribute
+  lookup finds it first, and each handle keeps the methods it has looked
+  up. A warm ``F.col`` then costs 1 Py4J round trip instead of 3, an
+  active-session lookup 2 instead of 4, and a warm ``F.col`` on a
+  session with call-site capture on 6 instead of 13. A warm
+  ``merge_incremental`` benchmark call makes 1,312 calling-thread round
+  trips instead of 2,446, of which 6 instead of 1,152 are reflection
+  lookups (``scripts/driver_floor.py``, seed 1). ``get_spark`` and
+  ``pin_session_confs`` both install them.
 
 Also home to the two per-session helpers every operator shares:
 ``observed`` (a counter read off a job that already runs) and
@@ -71,12 +75,16 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 CODEGEN_CACHE_ENTRIES = 1000
 
-# The JVM classes PySpark looks up for every Column function and JVM Seq;
-# each gets a pre-resolved handle under its full and its short name.
+# The JVM classes PySpark looks up for every Column function, JVM Seq and
+# active-session lookup, and, with call-site capture on, for every
+# DataFrame and Column call; each gets a pre-resolved handle under its
+# full and its short name.
 _ENTRY_POINTS = (
     "org.apache.spark.sql.functions",
     "org.apache.spark.api.python.PythonUtils",
     "org.apache.spark.sql.api.python.PythonSQLUtils",
+    "org.apache.spark.sql.classic.SparkSession",
+    "org.apache.spark.sql.catalyst.trees.PySparkCurrentOrigin",
 )
 
 

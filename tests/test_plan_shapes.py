@@ -177,18 +177,25 @@ def test_session_turns_off_call_site_capture(spark):
     assert err.value.getCondition().startswith("UNRESOLVED_COLUMN")
 
 
-def _col_round_trips(spark):
-    """Calling-thread Py4J round trips of one warm ``F.col``."""
+def _round_trips(spark, call):
+    """Calling-thread Py4J round trips of one warm ``call()``, and the
+    reflection lookups among them."""
     import threading
-
-    from pyspark.sql import functions as F
 
     from simpletasks_data_spark.session import count_py4j_round_trips
 
-    F.col("warm")
+    call()
     with count_py4j_round_trips(spark) as counts:
-        F.col("x")
-    return counts.get(threading.get_ident(), 0)
+        call()
+    me = threading.get_ident()
+    return counts.get(me, 0), counts.reflection.get(me, 0)
+
+
+def _col_round_trips(spark):
+    """Calling-thread Py4J round trips of one warm ``F.col``."""
+    from pyspark.sql import functions as F
+
+    return _round_trips(spark, lambda: F.col("x"))[0]
 
 
 def test_session_resolves_jvm_entry_points(spark):
@@ -201,29 +208,41 @@ def test_session_resolves_jvm_entry_points(spark):
 _RESTART_PROBE = """
 import json, sys
 sys.path[:0] = [sys.argv[1], sys.argv[2]]
+import pyspark.errors.utils
 from pyspark import SparkContext
-from pyspark.sql import SparkSession
+from pyspark.sql import SparkSession, functions as F
 from simpletasks_data_spark.session import get_spark, pin_session_confs
-from test_plan_shapes import _col_round_trips
+from test_plan_shapes import _col_round_trips, _round_trips
+
+
+def new_gateway(spark, *conf):
+    # as when a JVM is torn down between runs
+    spark.stop()
+    SparkContext._gateway.shutdown()
+    SparkContext._gateway = SparkContext._jvm = None
+    builder = SparkSession.builder.master("local[1]").config("spark.ui.enabled", "false")
+    for k, v in conf:
+        builder = builder.config(k, v)
+    return builder.getOrCreate()
+
 
 out = {}
 spark = get_spark(master="local[1]", shuffle_partitions=1)
 spark.stop()
 spark = get_spark(master="local[1]", shuffle_partitions=1)
 out["restarted"] = _col_round_trips(spark)
-# a new gateway, as when a JVM is torn down between runs
-spark.stop()
-SparkContext._gateway.shutdown()
-SparkContext._gateway = SparkContext._jvm = None
-spark = (
-    SparkSession.builder.master("local[1]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-    .getOrCreate()
-)
+out["active_session"] = _round_trips(spark, SparkSession.getActiveSession)
+spark = new_gateway(spark, ("spark.python.sql.dataFrameDebugging.enabled", "false"))
 out["foreign"] = _col_round_trips(spark)
 pin_session_confs(spark)
 out["foreign_pinned"] = _col_round_trips(spark)
+# call-site capture on: PySpark caches the conf's value process-wide
+pyspark.errors.utils._enable_debugging_cache = None
+spark = new_gateway(spark)
+col = lambda: F.col("x")
+out["capture"] = _round_trips(spark, col)
+pin_session_confs(spark)
+out["capture_pinned"] = _round_trips(spark, col)
 spark.stop()
 print(json.dumps(out))
 """
@@ -231,11 +250,14 @@ print(json.dumps(out))
 
 def test_entry_points_survive_restart_and_reach_foreign_sessions():
     """In a fresh process: a stopped and rebuilt ``get_spark`` session
-    keeps the one-round-trip ``F.col``; a session built on a new gateway
-    without ``get_spark`` pays the lookups (3) until
-    ``pin_session_confs`` resolves its entry points (1). The foreign
-    session turns call-site capture off, which costs round trips of its
-    own (see the ``session`` module docstring)."""
+    keeps the one-round-trip ``F.col``, and an active-session lookup
+    resolves nothing by name (4 round trips, 2 of them reflection,
+    without the ``SparkSession`` handle); a session built on a new
+    gateway without ``get_spark`` pays the lookups (3) until
+    ``pin_session_confs`` resolves its entry points (1). A foreign
+    session with call-site capture on pays 13 round trips, 7 of them
+    reflection, for a warm ``F.col``; pinned, 6 with none (11 and 5
+    with only the ``functions`` and ``PythonUtils`` handles)."""
     import json
     import subprocess
 
@@ -246,7 +268,14 @@ def test_entry_points_survive_restart_and_reach_foreign_sessions():
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     out = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert out == {"restarted": 1, "foreign": 3, "foreign_pinned": 1}
+    assert out == {
+        "restarted": 1,
+        "active_session": [2, 0],
+        "foreign": 3,
+        "foreign_pinned": 1,
+        "capture": [13, 7],
+        "capture_pinned": [6, 0],
+    }
 
 
 # Calling-thread Py4J round trips of one import below: 1,125 measured as
@@ -400,6 +429,56 @@ def test_plan_lint_no_antipatterns(spark):
     assert not bad, f"anti-patterns crept into plans: {bad}"
 
 
+
+
+# The tokenizer's regex (``functions/text.py::normalize_text``): each copy
+# in a plan is one more regex chain per row. A query's formatted plan may
+# hold at most TOKENIZER_MAX_COPIES of it: 11 in weighted_sample_quality,
+# whose sampling filter is pushed below the projection of its token array
+# with the aliases substituted in. When each text function tokenized its
+# own input, text_langid's plan held 108.
+TOKENIZER = "[^a-z0-9 ]"
+TOKENIZER_MAX_COPIES = 11
+
+
+def test_plan_lint_tokenizer_copies(spark):
+    """No catalog query's plan holds more than ``TOKENIZER_MAX_COPIES``
+    copies of the tokenizer."""
+    copies = {name: plan.count(TOKENIZER) for name, (plan, _) in _sweep(spark).items()}
+    bad = {n: c for n, c in copies.items() if c > TOKENIZER_MAX_COPIES}
+    assert not bad, f"plans re-tokenize the text: {bad}"
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_text_langid_tokenizes_once(spark):
+    """Language ID reads one projected token array (108 copies of the
+    tokenizer when each of its scores tokenized the text)."""
+    plan = _optimized(Q.queries()["text_langid"](spark, SF))
+    assert plan.count(TOKENIZER) == 1, plan
+
+
+def test_pipeline_checkpoint_tokenizes_at_most_twice(spark, monkeypatch):
+    """The frame ``pipeline_pretraining_corpus`` checkpoints holds the
+    tokenizer at most twice: the projected token array and the pushed-down
+    ``>= 3 tokens`` gate. With language ID and fingerprint tokenizing the
+    text themselves and the 'und' filter pushed below the language
+    projection, it held 219 copies in a 54k-character plan."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    frames = []
+    checkpoint = DataFrame.localCheckpoint
+    monkeypatch.setattr(
+        DataFrame,
+        "localCheckpoint",
+        lambda self, *a, **k: frames.append(self) or checkpoint(self, *a, **k),
+    )
+    Q.queries()["pipeline_pretraining_corpus"](spark, SF)
+    assert frames, "the pipeline no longer checkpoints its dedup frame"
+    copies = [_optimized(f).count(TOKENIZER) for f in frames]
+    assert max(copies) <= 2, copies
 
 
 # Queries whose partitionless windows run over a frame BOUNDED by

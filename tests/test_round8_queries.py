@@ -283,6 +283,39 @@ def test_pipeline_pretraining_corpus_matches_python(spark):
     assert got == want
 
 
+def test_token_array_functions_edge_cases(spark):
+    """Language ties break in lexicon order, token-free text is 'und',
+    and the fingerprint of an empty token set is md5 of the empty
+    string; each checked against the Python references on the token
+    array the functions take."""
+    from simpletasks_data_spark.functions import text as TX
+
+    texts = ["la the", "la la the", "", "!!!", None, "Der Hund und die Katze"]
+    df = spark.createDataFrame([(t,) for t in texts], "text string").select(
+        "text", TX.tokens("text").alias("toks")
+    )
+    got = df.select(
+        "text",
+        TX.lang_id("toks").alias("lang"),
+        TX.fingerprint("toks").alias("fpr"),
+        TX.token_count("toks").alias("n"),
+        TX.stopword_ratio("toks").alias("stop"),
+        TX.mean_token_len("toks").alias("mtl"),
+    ).collect()
+    rows = {r["text"]: r for r in got}
+    assert [rows[t]["lang"] for t in texts] == ["en", "fr", "und", "und", "und", "de"]
+    empty = hashlib.md5(b"").hexdigest()
+    for t in texts:
+        toks = _tokens(t or "")
+        assert rows[t]["lang"] == _lang_id(toks), t
+        assert rows[t]["fpr"] == hashlib.md5(" ".join(sorted(set(toks))).encode()).hexdigest()
+        if t is not None:
+            assert rows[t]["n"] == len(toks)
+    for t in ("", "!!!", None):
+        assert rows[t]["fpr"] == empty
+        assert (rows[t]["stop"], rows[t]["mtl"]) == (0.0, 0.0)
+
+
 def _bpe_python(word_counts, merges):
     """Independent greedy BPE trainer: weighted pair counts, argmax by
     (count desc, lhs asc, rhs asc), leftmost non-overlapping merge."""
