@@ -101,14 +101,11 @@ def probe(spark, sf_dir: str, label: str) -> dict:
     # changes; now any change to the operator IS the probe's shapes) --
     t0 = time.time()
     sizes = hstream.groupBy("_id").agg(F.count(F.lit(1)).alias("sz"))
-    # materialize hook (ADVICE r10): each stage is checkpointed before
-    # the next consumes it, so stage counts/timings measure ONE stage
-    # over materialized input — the pre-refactor chained methodology —
-    # while the stage expressions stay the shared production code
-    prefix, groups, cand = DD._ppjoin_prefix_stages(
-        hstream, sizes, THRESHOLD,
-        materialize=lambda d: d.localCheckpoint(eager=True),
-    )
+    # each returned stage is a lazy frame over the whole lineage, so a
+    # stage's count recomputes every stage upstream of it: the counts
+    # match a chained-checkpoint run, but t_shapes repeats the upstream
+    # work once per stage counted
+    prefix, groups, cand = DD._ppjoin_prefix_stages(hstream, sizes, THRESHOLD)
     n_prefix_rows = prefix.count()
     n_pair_groups = groups.count()
     n_candidates = cand.count()

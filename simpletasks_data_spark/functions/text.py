@@ -87,11 +87,13 @@ def tokens(col: Column | str) -> Column:
 
 
 def token_count(toks: Column | str) -> Column:
-    return F.size(_c(toks))
+    # array_size, not size: NULL for a NULL array (non-ANSI size is -1),
+    # as the SQL oracles' len()
+    return F.array_size(_c(toks))
 
 
 def distinct_token_count(toks: Column | str) -> Column:
-    return F.size(F.array_distinct(_c(toks)))
+    return F.array_size(F.array_distinct(_c(toks)))
 
 
 def token_ngrams(toks: Column | str, n: int) -> Column:

@@ -173,7 +173,7 @@ PPJOIN_K = 2  # k-prefix extension: one extra prefix element buys cnt>=2
 
 
 def _ppjoin_prefix_stages(
-    sh: DataFrame, sizes: DataFrame, threshold: float, materialize=None
+    sh: DataFrame, sizes: DataFrame, threshold: float
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The PPJoin candidate-generation stages, shared VERBATIM between
     :func:`ngram_jaccard_pairs` (production) and
@@ -192,13 +192,6 @@ def _ppjoin_prefix_stages(
     - ``cand``: ``groups`` after the k-prefix count and positional
       upper-bound filters (columns id_a, id_b, psz_a, psz_b, cnt, mra,
       mrb).
-
-    ``materialize`` (ADVICE r10): optional per-stage hook applied to
-    ``prefix`` and ``groups`` before the next stage consumes them.
-    Production passes None (fully lazy, one plan); the scale probe
-    passes ``lambda d: d.localCheckpoint(eager=True)`` so each stage is
-    timed over a materialized input instead of recomputing upstream
-    lineage — the pre-refactor chained-checkpoint methodology.
     """
     from pyspark.sql import Window
 
@@ -212,8 +205,6 @@ def _ppjoin_prefix_stages(
     prefix = ranked.join(sizes, "_id").select("_id", "h", "rn", "sz").where(
         F.col("rn") <= F.floor(F.lit(1.0 - threshold) * F.col("sz")) + PPJOIN_K
     )
-    if materialize is not None:
-        prefix = materialize(prefix)
     pa, pb = prefix.alias("a"), prefix.alias("b")
     t = F.lit(threshold)
     min_overlap = F.ceil(t / (1.0 + threshold) * (F.col("psz_a") + F.col("psz_b")))
@@ -237,8 +228,6 @@ def _ppjoin_prefix_stages(
             F.max("b.rn").alias("mrb"),
         )
     )
-    if materialize is not None:
-        groups = materialize(groups)
     cand = groups.where(
         (F.col("cnt") >= F.least(F.lit(PPJOIN_K), min_overlap))
         & (
@@ -256,7 +245,6 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 5,
     threshold: float = 0.6,
-    prefix_filter: bool = True,
     hashed_shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs by EXACT Jaccard over distinct char n-grams.
@@ -299,9 +287,7 @@ def ngram_jaccard_pairs(
     minhash_pairs_from_signatures verify precedent): a collision
     folding two shingles affects both engines the same way, ~never.
     Measured at sf0.1: 365s (naive) -> 33s (per-row PPJoin) -> ~13s
-    (aggregate filters). ``prefix_filter=False`` falls back to the
-    naive shared-any-shingle join (quadratic on self-similar corpora;
-    correctness baseline).
+    (aggregate filters).
 
     The shingle frame is materialized ONCE (multiple consumers would
     re-run the interpreted shingle pipeline per use), and
@@ -332,32 +318,24 @@ def ngram_jaccard_pairs(
         )
     sizes = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("sz"))  # shingles already distinct
 
-    if prefix_filter:
-        _, _, cand = _ppjoin_prefix_stages(sh, sizes, threshold)
-        cand = cand.select("id_a", "id_b")
-        hsets = sh.groupBy("_id").agg(F.sort_array(F.collect_list("h")).alias("hs"))
-        shared = (
-            cand.join(
-                hsets.select(F.col("_id").alias("id_a"), F.col("hs").alias("hs_a")),
-                "id_a",
-            )
-            .join(
-                hsets.select(F.col("_id").alias("id_b"), F.col("hs").alias("hs_b")),
-                "id_b",
-            )
-            .select(
-                "id_a",
-                "id_b",
-                F.size(F.array_intersect("hs_a", "hs_b")).alias("inter"),
-            )
+    _, _, cand = _ppjoin_prefix_stages(sh, sizes, threshold)
+    hsets = sh.groupBy("_id").agg(F.sort_array(F.collect_list("h")).alias("hs"))
+    shared = (
+        cand.select("id_a", "id_b")
+        .join(
+            hsets.select(F.col("_id").alias("id_a"), F.col("hs").alias("hs_a")),
+            "id_a",
         )
-    else:
-        a, b = sh.alias("a"), sh.alias("b")
-        shared = (
-            a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a._id") < F.col("b._id")))
-            .groupBy(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-            .agg(F.count(F.lit(1)).alias("inter"))
+        .join(
+            hsets.select(F.col("_id").alias("id_b"), F.col("hs").alias("hs_b")),
+            "id_b",
         )
+        .select(
+            "id_a",
+            "id_b",
+            F.size(F.array_intersect("hs_a", "hs_b")).alias("inter"),
+        )
+    )
 
     sz_a = sizes.select(F.col("_id").alias("id_a"), F.col("sz").alias("sz_a"))
     sz_b = sizes.select(F.col("_id").alias("id_b"), F.col("sz").alias("sz_b"))

@@ -39,7 +39,6 @@ def incremental_rollup_refresh(
     partial: Dict[str, Column],
     merge: Dict[str, Column],
     bucket_col: str | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Return the refreshed rollup: ``stored`` with ``batch`` folded in.
 
@@ -56,21 +55,18 @@ def incremental_rollup_refresh(
     Plan shape: ONE shuffle over the batch (the delta agg), ONE over the
     affected slice + delta (the merge agg); the untouched stream is a
     broadcast anti-join — map-only. Nothing re-scans raw history.
-    ``materialize`` (default) eagerly checkpoints the delta and its
-    touched-bucket set: both feed multiple plan branches (anti, semi,
-    merge) and Spark does not reuse subtrees across branches, so without
-    it the batch aggregation would recompute per consumer.
+    The delta and its touched-bucket set are eagerly checkpointed: both
+    feed multiple plan branches (anti, semi, merge) and Spark does not
+    reuse subtrees across branches, so without it the batch aggregation
+    would recompute per consumer.
     """
     keys = list(keys)
     bucket_col = bucket_col or keys[0]
     delta = batch.groupBy(*keys).agg(*[c.alias(n) for n, c in partial.items()])
-    if materialize:
-        delta = delta.localCheckpoint(eager=True)
+    delta = delta.localCheckpoint(eager=True)
     # The touched-bucket set is |batch buckets| rows — broadcast both the
     # membership filter (affected slice) and its negation (untouched).
-    touched = delta.select(bucket_col).distinct()
-    if materialize:
-        touched = touched.localCheckpoint(eager=True)
+    touched = delta.select(bucket_col).distinct().localCheckpoint(eager=True)
     untouched = stored.join(F.broadcast(touched), bucket_col, "left_anti")  # b: delta
     affected = stored.join(F.broadcast(touched), bucket_col, "left_semi")  # b: delta
     merged = (

@@ -144,7 +144,7 @@ def _sniff_media(b: bytes) -> tuple:
     raise ValueError("unknown container")
 
 
-def decode_metadata(media: DataFrame, batch_hint: int = 64) -> DataFrame:
+def decode_metadata(media: DataFrame) -> DataFrame:
     """Decode payloads -> container format + intrinsic dimensions via
     Arrow-batched mapInPandas. REAL kernel (round-10, closing the r9
     'synthetic stand-in' partial): :func:`_sniff_media` genuinely parses

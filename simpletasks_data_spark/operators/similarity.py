@@ -34,6 +34,14 @@ __all__ = ["knn_bruteforce", "knn_ivf_signbits", "knn_quantized_rescore",
     "knn_bruteforce_blas", "embedding_dedupe_pairs", "ivf_centroids",
     "hard_negatives", "retrieval_eval", "mmr_select"]
 
+# candidate-side broadcast gate of the exact knn operators
+# (broadcast_candidates="auto"): the side is counted, then hinted only
+# at or under this many rows
+BROADCAST_ROWS_MAX = 1_000_000
+# knn_bruteforce_blas collects its candidate side onto the driver and
+# broadcasts it: float64 at 64 dims is ~0.5 GB a million rows
+BLAS_CANDIDATE_ROWS_MAX = 2_000_000
+
 
 def _norm_frame(df: DataFrame, id_col: str, vec_col: str, alias: str) -> DataFrame:
     return df.select(
@@ -66,20 +74,19 @@ def knn_bruteforce(
     vec_col: str = "embedding",
     k: int = 5,
     broadcast_candidates: bool | str = "auto",
-    max_broadcast_rows: int = 1_000_000,
 ) -> DataFrame:
     """Exact top-k: queries × candidates cross join, cosine, window top-k.
     (query_id, neighbor_id, rank, cosine). Self-matches excluded.
 
     This is the CORRECTNESS BASELINE — O(|q| * |c|) work. At scale use
     ``knn_ivf_signbits``. ``broadcast_candidates="auto"`` counts the
-    candidate side (one cheap job) and only broadcasts below
-    ``max_broadcast_rows``; forcing ``True`` on a 100 TB candidate table
+    candidate side (one cheap job) and only broadcasts at or under
+    ``BROADCAST_ROWS_MAX``; forcing ``True`` on a 100 TB candidate table
     would OOM the driver, so the gate is the default."""
     q = _norm_frame(queries, id_col, vec_col, "q").withColumnRenamed("q_id", "query_id")
     c = _norm_frame(emb, id_col, vec_col, "c").withColumnRenamed("c_id", "neighbor_id")
     if broadcast_candidates == "auto":
-        broadcast_candidates = emb.count() <= max_broadcast_rows
+        broadcast_candidates = emb.count() <= BROADCAST_ROWS_MAX
     if broadcast_candidates:
         c = F.broadcast(c)  # b: gated
         # Spread the streamed probe side (r11, measured): the query
@@ -310,7 +317,6 @@ def knn_quantized_rescore(
     k: int = 5,
     shortlist: int = 15,
     broadcast_candidates: bool | str = "auto",
-    max_broadcast_rows: int = 1_000_000,
 ) -> DataFrame:
     """Two-stage ANN: int8-quantized candidate scoring, exact rescore.
 
@@ -350,7 +356,7 @@ def knn_quantized_rescore(
         .withColumn("c_codes", F.transform("c_vec", lambda x: F.round(x * F.col("c_scale"))))
     )
     if broadcast_candidates == "auto":
-        broadcast_candidates = emb.count() <= max_broadcast_rows
+        broadcast_candidates = emb.count() <= BROADCAST_ROWS_MAX
     codes = c.select("neighbor_id", "c_scale", "c_norm", "c_codes")
     if broadcast_candidates:
         codes = F.broadcast(codes)  # b: gated
@@ -402,7 +408,6 @@ def knn_bruteforce_blas(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    max_candidate_rows: int = 2_000_000,
 ) -> DataFrame:
     """Exact top-k via Arrow + numpy: the candidate matrix broadcasts to
     the Python workers once and every query partition scores against it
@@ -417,8 +422,8 @@ def knn_bruteforce_blas(
     rounding is decimal HALF_UP like Spark's ``round``.
 
     Scale shape: the candidate side must fit one executor's memory
-    (``max_candidate_rows`` guards it — float64 at 64 dims is ~0.5 GB
-    per million rows); queries partition freely, so total work
+    (``BLAS_CANDIDATE_ROWS_MAX`` guards it: at most one row past the cap
+    is collected before the raise); queries partition freely, so total work
     distributes across the cluster with zero shuffle. Past the gate,
     shard the candidate set and merge per-shard top-k, or switch to
     ``knn_ivf_signbits`` / ``knn_quantized_rescore``.
@@ -427,13 +432,15 @@ def knn_bruteforce_blas(
     import pandas as pd
 
     spark = emb.sparkSession
-    cand = emb.select(
-        F.col(id_col).alias("_id"), as_double(vec_col).alias("_v")
-    ).toPandas()  # c: gated
-    if len(cand) > max_candidate_rows:
+    cand = (
+        emb.select(F.col(id_col).alias("_id"), as_double(vec_col).alias("_v"))
+        .limit(BLAS_CANDIDATE_ROWS_MAX + 1)
+        .toPandas()  # c: gated
+    )
+    if len(cand) > BLAS_CANDIDATE_ROWS_MAX:
         raise ValueError(
-            f"candidate side has {len(cand)} rows > max_candidate_rows="
-            f"{max_candidate_rows}; shard it or use an ANN operator"
+            f"candidate side has more than BLAS_CANDIDATE_ROWS_MAX="
+            f"{BLAS_CANDIDATE_ROWS_MAX} rows; shard it or use an ANN operator"
         )
     if not len(cand):
         raise ValueError("knn_bruteforce_blas: empty candidate embedding frame")
@@ -560,7 +567,6 @@ def hard_negatives(
     vec_col: str = "embedding",
     k: int = 3,
     broadcast_candidates: bool | str = "auto",
-    max_broadcast_rows: int = 1_000_000,
 ) -> DataFrame:
     """Hard-negative mining for contrastive / retrieval training: for
     each query vector, the top-k most-similar candidates with a
@@ -599,7 +605,7 @@ def hard_negatives(
         )
     )
     if broadcast_candidates == "auto":
-        broadcast_candidates = emb.count() <= max_broadcast_rows
+        broadcast_candidates = emb.count() <= BROADCAST_ROWS_MAX
     if broadcast_candidates:
         c = F.broadcast(c)  # b: gated
     dot = F.aggregate(

@@ -229,9 +229,7 @@ def cms_estimate(
     )
 
 
-def cms_inner_product(
-    cms_a: DataFrame, cms_b: DataFrame, d: int = 4
-) -> DataFrame:
+def cms_inner_product(cms_a: DataFrame, cms_b: DataFrame) -> DataFrame:
     """Join-size estimate from two Count-Min sketches over the same hash
     family: for each row j, the bucket-wise dot product of the two
     counter vectors; the estimate is the MIN over rows — an

@@ -44,7 +44,7 @@ from .streaming.ingest import replay_tuned
 from .operators import corpus as CP
 from .operators import dedupe as DD
 from .operators import similarity as SIM
-from .session import _SESSION_STORE, session_store
+from .session import _SESSION_STORE, pin_session_confs, session_store
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -62,16 +62,9 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-def _pin_session_confs(spark: SparkSession) -> None:
-    """The external driver calls queries with ITS OWN session — delegate
-    to the shared helper (session.pin_session_confs)."""
-    from .session import pin_session_confs
-
-    pin_session_confs(spark)
-
-
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    _pin_session_confs(spark)
+    # the external driver calls queries with its own session
+    pin_session_confs(spark)
     if table == "events":
         # The events parquet stores INT64 Timestamp(isAdjustedToUTC=false,
         # MICROS), which Spark 4.x reads natively as TIMESTAMP_NTZ — no
@@ -2103,9 +2096,7 @@ WHERE round(CAST(i AS DOUBLE) / (sa.sz + sb.sz - i), 4) >= 0.6
 """
 
 
-def _verify_candidates(
-    spark: SparkSession, hsets: DataFrame, cand: DataFrame
-) -> DataFrame:
+def _verify_candidates(hsets: DataFrame, cand: DataFrame) -> DataFrame:
     """Exact-Jaccard verification of candidate pairs against the
     store's per-doc shingle-hash sets: the (tiny) candidate id set
     semi-prunes the set frame, the surviving sets broadcast onto the
@@ -2149,7 +2140,7 @@ def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = cand.repartition(
         spark.sparkContext.defaultParallelism, "id_a", "id_b"
     ).localCheckpoint(eager=True)
-    return _verify_candidates(spark, hsets, cand)
+    return _verify_candidates(hsets, cand)
 
 
 @register("dedup_minhash_verified", _minhash_verified_sql())
@@ -2233,7 +2224,7 @@ def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = cand.repartition(
         spark.sparkContext.defaultParallelism, "id_a", "id_b"
     ).localCheckpoint(eager=True)
-    ver = _verify_candidates(spark, hsets, cand).select("id_a", "id_b")
+    ver = _verify_candidates(hsets, cand).select("id_a", "id_b")
     star_edges = (
         mm.join(groups, "_ck")
         .where((F.col("_n") >= 2) & (F.col("_id") != F.col("_rep")))
@@ -5234,10 +5225,10 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING
 """)
 @replay_tuned
 def streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user running totals through Spark 4's transformWithStateInPandas
-    (typed ValueState), run to completion against the window-function
-    twin as oracle — one output row per event carrying the count/total
-    as of that event."""
+    """Per-user running totals through applyInPandasWithState (one
+    (n, total) state per user), run to completion against the
+    window-function twin as oracle — one output row per event carrying
+    the count/total as of that event."""
     import uuid
 
     from .streaming import stream_events
@@ -16306,7 +16297,7 @@ def matryoshka_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Truncation is a map-only F.slice — at 100 TB the prefix frames are
     narrower scans, never a recompute of the corpus. Broadcast of the
     candidate side is left on the "auto" row-count gate
-    (knn_bruteforce max_broadcast_rows) — forcing it on a large corpus
+    (similarity.BROADCAST_ROWS_MAX) — forcing it on a large corpus
     would OOM the driver (ADVICE r6)."""
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")

@@ -29,9 +29,10 @@ CSV source can derive exact file order when asked (see ``csv.py``).
 from __future__ import annotations
 
 import enum
-from typing import Callable, Optional
+from typing import Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from ..mapping import Mapping
 
@@ -100,12 +101,14 @@ def overrides(obj: object, base: type, hook: str) -> bool:
     return getattr(getattr(obj, hook), "__func__", None) is not getattr(base, hook)
 
 
-class _CallbackSource(Source):
-    """Internal: wrap a load function as a Source."""
-
-    def __init__(self, load: Callable[[SparkSession], DataFrame], **kwargs) -> None:
-        super().__init__(**kwargs)
-        self._load = load
-
-    def load_raw(self, spark: SparkSession) -> DataFrame:
-        return self._load(spark)
+def ordered_lines(spark: SparkSession, path: str) -> DataFrame:
+    """(value, ``_src_pos``) per line of the text files at ``path``, read
+    by the Hadoop line reader, which takes any Hadoop path or URI.
+    ``getSplits`` returns splits in (file, offset) order and
+    ``zipWithIndex`` counts per split, so the index IS the file line
+    order."""
+    lines = spark.sparkContext.textFile(path).zipWithIndex()
+    return spark.createDataFrame(lines, T.StructType([
+        T.StructField("value", T.StringType(), True),
+        T.StructField(SRC_POS, T.LongType(), False),
+    ]))

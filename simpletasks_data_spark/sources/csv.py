@@ -1,23 +1,22 @@
 """CSV source (reference ``ImportCsv``, ``importsource.py:154-170``).
 
 The reference streams ``csv.reader`` rows in file order; duplicate-key
-last-wins semantics and header skipping both depend on that order. Three
-strategies:
+last-wins semantics and header skipping both depend on that order. The
+path and ``ordered`` pick one of three reads:
 
-- ``ordered=True, engine="datasource"`` (default): the ordered scan of
+- ``ordered=True`` on a plain path (default): the ordered scan of
   ``ordered_csv.py`` — whole files read in order with Python's
   ``csv.reader``, so multi-line quoted records parse exactly like the
   reference (``importsource.py:167-170``), and ``_src_pos`` encodes
   (file, line) total order with no counting pass. The driver plans the
   read groups and sizes the schema (``num_columns``, or the first line)
   with no Spark job; the read is one ``mapInArrow`` task per group
-  (small files share one). The engine keeps the name of the Python
-  DataSource connector it replaced.
-- ``ordered=True, engine="rdd"``: read lines as a Hadoop text RDD —
-  ``getSplits`` returns splits in (file, offset) order and ``zipWithIndex``
-  counts per split, so the index IS the file line order — then parse each
-  line JVM-side with ``from_csv``. No multi-line quoted records (documented
-  divergence); useful for Hadoop URIs, which Python's ``open()`` cannot read.
+  (small files share one).
+- ``ordered=True`` on a URI (``hdfs://``, ``s3a://``, ``file://``):
+  Python's ``open()`` cannot read it, so the lines come from the Hadoop
+  line reader (``base.ordered_lines``: file line order from
+  ``zipWithIndex``) and each is parsed JVM-side with ``from_csv``. No
+  multi-line quoted records (documented divergence).
 - ``ordered=False``: plain ``spark.read.csv`` + ``monotonically_increasing_id``.
   Order is only partition-stable — fine when keys are unique or when an
   explicit ``order_col`` in the data provides the real ordering. This is the
@@ -38,7 +37,7 @@ from pyspark.sql import types as T
 
 from ..mapping import Mapping
 from . import ordered_csv
-from .base import SRC_POS, ImportMode, Source
+from .base import SRC_POS, ImportMode, Source, ordered_lines
 
 
 class CsvSource(Source):
@@ -50,28 +49,21 @@ class CsvSource(Source):
         name: Optional[str] = None,
         num_columns: Optional[int] = None,
         ordered: bool = True,
-        engine: str = "datasource",
         delimiter: str = ",",
         quote: str = '"',
         encoding: str = "UTF-8",
         splittable: bool = False,
     ) -> None:
-        """``engine`` (for ordered reads): ``"datasource"`` (default) = the
-        driver-planned ``csv.reader`` scan (``ordered_csv.py``) — exact
-        file order plus correct multi-line quoted records, matching the
-        reference's ``csv.reader``; ``"rdd"`` = text RDD + ``from_csv``
-        per line (no multi-line records).
-
-        ``splittable`` (datasource engine only): byte-range-split each
-        file on line boundaries so one large file reads on every core;
-        the total order is preserved, but multi-line quoted records are
-        NOT supported on this path (see ``ordered_csv.py`` module doc) —
-        leave False for files that may contain them."""
+        """``splittable`` (ordered reads of a plain path only):
+        byte-range-split each file on line boundaries so one large file
+        reads on every core; the total order is preserved, but multi-line
+        quoted records are NOT supported on this path (see
+        ``ordered_csv.py`` module doc) — leave False for files that may
+        contain them."""
         super().__init__(mapping, mode=mode, name=name)
         self.path = path
         self.num_columns = num_columns
         self.ordered = ordered
-        self.engine = engine
         self.delimiter = delimiter
         self.quote = quote
         self.encoding = encoding
@@ -86,7 +78,7 @@ class CsvSource(Source):
         return T.StructType([T.StructField(f"_c{i}", T.StringType(), True) for i in range(n)])
 
     def load_raw(self, spark: SparkSession) -> DataFrame:
-        if self.ordered and self.engine == "datasource":
+        if self.ordered and "://" not in self.path:
             return ordered_csv.scan(
                 spark, self.path, self.num_columns, self.delimiter, self.quote,
                 self.encoding, self.splittable,
@@ -94,13 +86,8 @@ class CsvSource(Source):
         schema = self._csv_schema(spark)
         opts = {"delimiter": self.delimiter, "quote": self.quote, "mode": "PERMISSIVE"}
         if self.ordered:
-            lines = spark.sparkContext.textFile(self.path).zipWithIndex()
-            df = spark.createDataFrame(lines, T.StructType([
-                T.StructField("value", T.StringType(), True),
-                T.StructField(SRC_POS, T.LongType(), False),
-            ]))
             ddl = ", ".join(f"`{f.name}` STRING" for f in schema.fields)
-            parsed = df.select(
+            parsed = ordered_lines(spark, self.path).select(
                 F.from_csv(F.col("value"), ddl, opts).alias("r"), F.col(SRC_POS)
             )
             return parsed.select("r.*", SRC_POS)

@@ -9,9 +9,9 @@ convention), surfacing as the positional ``_c0.._cN`` string columns every
 ``Mapping`` consumes — a mapping written for CSV works unchanged on the
 fixed-width extract of the same feed.
 
-Scale notes: ``ordered=True`` (default) counts lines per Hadoop split with
-``zipWithIndex`` (split order is (file, offset) order, so the index IS the
-file line order); ``ordered=False`` is the splittable no-Python path with
+Scale notes: ``ordered=True`` (default) reads through ``base.ordered_lines``
+(``zipWithIndex`` over the Hadoop line reader: the index IS the file line
+order); ``ordered=False`` is the splittable no-Python path with
 partition-stable order — fine when keys are unique or an ``order_col``
 field carries the real sequence. Slicing is pure ``substring`` Column
 arithmetic: one scan, no parse pass, no UDF.
@@ -23,10 +23,9 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..mapping import Mapping
-from .base import SRC_POS, ImportMode, Source
+from .base import SRC_POS, ImportMode, Source, ordered_lines
 
 
 class FixedWidthSource(Source):
@@ -60,17 +59,9 @@ class FixedWidthSource(Source):
 
     def load_raw(self, spark: SparkSession) -> DataFrame:
         if self.ordered:
-            lines = spark.sparkContext.textFile(self.path).zipWithIndex()
-            df = spark.createDataFrame(
-                lines,
-                T.StructType(
-                    [
-                        T.StructField("value", T.StringType(), True),
-                        T.StructField(SRC_POS, T.LongType(), False),
-                    ]
-                ),
+            return ordered_lines(spark, self.path).select(
+                *self._slice_cols(), F.col(SRC_POS)
             )
-            return df.select(*self._slice_cols(), F.col(SRC_POS))
         df = spark.read.text(self.path)
         return df.select(
             *self._slice_cols(), F.monotonically_increasing_id().alias(SRC_POS)

@@ -19,11 +19,10 @@ from __future__ import annotations
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..mapping import Mapping
-from .base import SRC_POS, ImportMode
+from .base import ImportMode
 from .table import TableSource
 
 
@@ -49,11 +48,8 @@ class JsonlSource(TableSource):
         self.schema = schema
         self.options = options or {}
 
-    def load_raw(self, spark: SparkSession) -> DataFrame:
+    def _load_frame(self, spark: SparkSession) -> DataFrame:
         reader = spark.read.schema(self.schema)
         for k, v in self.options.items():
             reader = reader.option(k, v)
-        df = reader.json(self.path)
-        if self.order_col is not None:
-            return df.withColumn(SRC_POS, F.col(self.order_col).cast("long"))
-        return df.withColumn(SRC_POS, F.xxhash64(*[F.col(c) for c in df.columns]))
+        return reader.json(self.path)

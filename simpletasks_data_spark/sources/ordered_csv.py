@@ -1,11 +1,11 @@
 """Ordered CSV scan: exact file-then-line order in one Arrow map.
 
 The reference's CSV source streams ``csv.reader`` rows in file order
-(``importsource.py:154-170``). This
-module is the engine's exact-order CSV path: files are read with Python's
-``csv.reader`` (correct multi-line quoted records, unlike per-line
-``from_csv``), and ``_src_pos`` encodes a total order consistent with
-file-then-line order without a counting pass.
+(``importsource.py:154-170``). This module is ``CsvSource``'s ordered
+read of a plain path: files are read with Python's ``csv.reader``
+(correct multi-line quoted records, unlike per-line ``from_csv``), and
+``_src_pos`` encodes a total order consistent with file-then-line order
+without a counting pass.
 
 The driver plans the whole scan with no Spark job and no Python worker:
 it lists the files (``_paths``), packs them into read groups or splits
@@ -21,8 +21,8 @@ and one to plan the read, about 0.27 CPU-s each before they read a byte.
 
 Width: without an explicit width, ``_sniff_width`` counts the delimiters
 in the first line of the first non-empty file (in ``_paths`` order);
-quoted delimiters count too, as in the first-line sniff the other CSV
-engines use.
+quoted delimiters count too, as in the first-line sniff ``CsvSource``'s
+other two reads use.
 
 Two partitioning strategies (VERDICT r10 item 2):
 
@@ -56,8 +56,9 @@ Two partitioning strategies (VERDICT r10 item 2):
 
 Files are opened with Python's ``open()``, so the path must be visible
 to the driver and to every executor under the same name (a local or
-shared file system); Hadoop URIs go through ``CsvSource``'s ``rdd`` or
-unordered engines.
+shared file system). ``CsvSource`` sends only plain paths here; a path
+with a URI scheme (``hdfs://``, ``s3a://``, ``file://``) reads through
+the Hadoop line reader instead.
 """
 
 from __future__ import annotations

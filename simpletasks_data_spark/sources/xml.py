@@ -19,11 +19,10 @@ from __future__ import annotations
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..mapping import Mapping
-from .base import SRC_POS, ImportMode
+from .base import ImportMode
 from .table import TableSource
 
 
@@ -51,11 +50,8 @@ class XmlSource(TableSource):
         self.row_tag = row_tag
         self.options = options or {}
 
-    def load_raw(self, spark: SparkSession) -> DataFrame:
+    def _load_frame(self, spark: SparkSession) -> DataFrame:
         reader = spark.read.format("xml").option("rowTag", self.row_tag).schema(self.schema)
         for k, v in self.options.items():
             reader = reader.option(k, v)
-        df = reader.load(self.path)
-        if self.order_col is not None:
-            return df.withColumn(SRC_POS, F.col(self.order_col).cast("long"))
-        return df.withColumn(SRC_POS, F.xxhash64(*[F.col(c) for c in df.columns]))
+        return reader.load(self.path)

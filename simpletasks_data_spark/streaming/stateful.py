@@ -169,84 +169,15 @@ RUNNING_OUT_SCHEMA = (
 )
 
 
-def _tws_available() -> bool:
-    """transformWithStateInPandas runs a gRPC state server between the JVM
-    and a Python driver worker — without ``grpcio``/``protobuf`` the worker
-    exits at query start ("driver worker exited unexpectedly"). Gate on
-    the import so the operator degrades to applyInPandasWithState in
-    environments without the wire deps (this sandbox among them)."""
-    try:
-        import grpc  # noqa: F401
-        import google.protobuf  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
-def running_totals_stateful(events: DataFrame, api: str = "auto") -> DataFrame:
+def running_totals_stateful(events: DataFrame) -> DataFrame:
     """Per-user running event count + value total, one output row per
-    event. State per user is a single (n, total) value — bounded
-    regardless of stream length. Events fold in (ts, event_id) order
-    within each batch, so the running totals equal the batch
-    window-function twin (sum over ROWS UNBOUNDED PRECEDING) exactly —
-    the same sequential IEEE addition order.
-
-    ``api``: "tws" = Spark 4's transformWithStateInPandas (typed state
-    handles; needs grpcio+protobuf), "apis" = applyInPandasWithState,
-    "auto" = tws when its deps import, else apis. Identical semantics
-    either way; the oracle doesn't care which ran.
+    event, through applyInPandasWithState. State per user is a single
+    (n, total) value — bounded regardless of stream length. Events fold
+    in (ts, event_id) order within each batch, so the running totals
+    equal the batch window-function twin (sum over ROWS UNBOUNDED
+    PRECEDING) exactly — the same sequential IEEE addition order.
 
     Input columns: user_id, ts, event_id, value."""
-    if api == "auto":
-        api = "tws" if _tws_available() else "apis"
-    if api == "apis":
-        return _running_totals_apis(events)
-
-    import pandas as pd  # noqa: F811 (local for executor pickling)
-
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: "StatefulProcessorHandle") -> None:
-            self._state = handle.getValueState("agg", "n long, total double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            st = self._state.get()
-            n, total = (st[0], st[1]) if st is not None else (0, 0.0)
-            uid = key[0]
-            batch = pd.concat(list(rows)).sort_values(["ts", "event_id"])
-            out_n, out_tot = [], []
-            for v in batch["value"]:
-                n += 1
-                total += float(v)
-                out_n.append(n)
-                out_tot.append(round(total, 4))
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "event_id": batch["event_id"].values,
-                    "user_id": uid,
-                    "ts": batch["ts"].values,
-                    "running_n": out_n,
-                    "running_total": out_tot,
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_RunningTotals(),
-        outputStructType=RUNNING_OUT_SCHEMA,
-        outputMode="append",
-        timeMode="None",
-    )
-
-
-def _running_totals_apis(events: DataFrame) -> DataFrame:
-    """applyInPandasWithState twin of the transformWithState form: same
-    (n, total) scalar state, same per-event emission, NoTimeout."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def fold(key, pdfs, state: "GroupState"):

@@ -124,15 +124,16 @@ def test_unordered_spark_csv_roundtrip_fuzz(spark, tmp_path):
 
 
 def test_rdd_engine_roundtrip_fuzz(spark, tmp_path):
-    # engine="rdd": per-line from_csv — no multi-line records (documented
-    # divergence), same doubled-quote caveat as above; fuzz the quote-free
-    # single-line grammar and the exact zipWithIndex order contract.
+    # a file:// URI reads through the Hadoop line reader: per-line
+    # from_csv — no multi-line records (documented divergence), same
+    # doubled-quote caveat as above; fuzz the quote-free single-line
+    # grammar and the exact zipWithIndex order contract.
     rng = random.Random(31415)
     for trial in range(4):
         rows = _rand_table(rng, LINE_ALPHABET, max_cols=3)
         p = tmp_path / f"r{trial}.csv"
         _write(p, rows)
-        src = CsvSource(str(p), _mapping(3), num_columns=3, engine="rdd")
+        src = CsvSource(p.as_uri(), _mapping(3), num_columns=3)
         got = [
             tuple(r[f"_c{i}"] for i in range(3))
             for r in src.load_raw(spark).orderBy(SRC_POS).collect()

@@ -279,6 +279,22 @@ def test_knn_blas_bit_identical_to_jvm(spark):
     assert a == b
 
 
+def test_knn_blas_raises_past_candidate_cap(spark, monkeypatch):
+    """Over ``BLAS_CANDIDATE_ROWS_MAX`` candidate rows the operator
+    raises a ValueError that names the cap; it collects at most one row
+    past the cap to find out."""
+    import pytest
+
+    from simpletasks_data_spark.operators import similarity as SIM
+
+    monkeypatch.setattr(SIM, "BLAS_CANDIDATE_ROWS_MAX", 2)
+    emb = spark.createDataFrame(
+        [(i, [1.0, float(i)]) for i in range(3)], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="BLAS_CANDIDATE_ROWS_MAX=2"):
+        SIM.knn_bruteforce_blas(emb, emb, k=1)
+
+
 def test_entity_linkage_deletes_equals_naive_block(spark):
     """The symmetric-delete neighborhood is EXACT for distance <= 1: the
     candidate-pruned result must equal the full within-block quadratic

@@ -842,6 +842,37 @@ def test_session_memos_go_through_session_store():
     assert not bad, "hand-rolled session memo keys:\n" + "\n".join(bad)
 
 
+def test_functions_read_every_parameter():
+    """No module-level function in the package takes a parameter its
+    body never reads: an unread parameter is an option that selects
+    nothing. Registered catalog queries are exempt, because their
+    ``(spark, sf_dir)`` signature is fixed."""
+    import ast
+
+    def registered(fn):
+        return any(
+            isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+            for d in fn.decorator_list
+        )
+
+    bad = []
+    for name, tree in _package_asts():
+        for fn in tree.body:
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) or registered(fn):
+                continue
+            a = fn.args
+            params = [p.arg for p in a.posonlyargs + a.args + a.kwonlyargs]
+            params += [p.arg for p in (a.vararg, a.kwarg) if p is not None]
+            read = {
+                n.id
+                for stmt in fn.body
+                for n in ast.walk(stmt)
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+            }
+            bad += [f"{name}:{fn.lineno} {fn.name}({p})" for p in params if p not in read]
+    assert not bad, "parameters no body reads:\n" + "\n".join(bad)
+
+
 # --- bounded-collect lint (round 8, companion to the broadcast lint) --------
 # A .collect()/.toPandas()/.toArrow()/.first() in package code pulls rows onto the
 # driver: bounded-size pulls (1-row aggs, k centroids, per-partition

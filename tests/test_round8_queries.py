@@ -316,6 +316,28 @@ def test_token_array_functions_edge_cases(spark):
         assert (rows[t]["stop"], rows[t]["mtl"]) == (0.0, 0.0)
 
 
+def test_null_text_counts_and_quality(spark):
+    """A NULL text has NULL token counts (the SQL oracles' ``len`` of a
+    NULL list), so its quality's length term is skipped by ``least``:
+    0.625, the DuckDB ``text_quality`` oracle's value on the same row,
+    where ``""`` scores 0.375."""
+    from simpletasks_data_spark.functions import text as TX
+
+    df = spark.createDataFrame([(1, None), (2, "")], "doc_id long, text string")
+    toks = df.select("doc_id", TX.tokens("text").alias("toks"))
+    counts = {
+        r["doc_id"]: (r["n"], r["nd"])
+        for r in toks.select(
+            "doc_id",
+            TX.token_count("toks").alias("n"),
+            TX.distinct_token_count("toks").alias("nd"),
+        ).collect()
+    }
+    assert counts == {1: (None, None), 2: (0, 0)}
+    quality = {r["doc_id"]: r["quality"] for r in Q._quality(df).collect()}
+    assert quality == {1: 0.625, 2: 0.375}
+
+
 def _bpe_python(word_counts, merges):
     """Independent greedy BPE trainer: weighted pair counts, argmax by
     (count desc, lhs asc, rhs asc), leftmost non-overlapping merge."""

@@ -130,7 +130,7 @@ def _events():
 
 def test_streaming_running_totals_matches_python(spark):
     """Third implementation of the per-user running fold (the engine is
-    transformWithStateInPandas, the oracle a SQL window): a python loop
+    applyInPandasWithState, the oracle a SQL window): a python loop
     in the same (ts, event_id) order must land on the identical
     cumulative float trajectory."""
     got = {

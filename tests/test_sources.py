@@ -1,6 +1,7 @@
 """Source adapters: CSV file order, header skip, table source."""
 
 import os
+import pathlib
 
 from pyspark.sql import functions as F
 
@@ -132,14 +133,14 @@ def test_ordered_csv_datasource_multifile(spark, tmp_path):
 
 
 def test_csv_source_datasource_engine(spark, tmp_path):
-    """CsvSource(engine='datasource') runs the full import through the
+    """CsvSource on a plain path runs the full import through the
     ordered ``csv.reader`` scan."""
     import os
 
     p = os.path.join(tmp_path, "src2.csv")
     with open(p, "w", encoding="utf-8") as f:
         f.write("id,col1,col2,col3,col4,col5\n3,Z,y,x,w,7\n")
-    src = CsvSource(p, MappingA(), engine="datasource")
+    src = CsvSource(p, MappingA())
     target = TargetTable(
         schema=TARGET_SCHEMA,
         df=spark.createDataFrame([], TARGET_SCHEMA),
@@ -161,7 +162,7 @@ def test_csv_default_path_multiline_quoted(spark, tmp_path):
         f.write('id,col1,col2,col3,col4,col5\n')
         f.write('1,"A\nB",c2,c3,c4,5\n')
         f.write('2,x,y,z,w,6\n')
-    src = CsvSource(p, MappingA())  # default engine
+    src = CsvSource(p, MappingA())  # plain path: the ordered scan
     df = src.load_raw(spark).orderBy(SRC_POS)
     rows = df.collect()
     assert len(rows) == 3                 # 2 records + header, not 4 lines
@@ -179,10 +180,11 @@ def test_csv_default_path_multiline_quoted(spark, tmp_path):
 
 
 def test_csv_rdd_engine_still_available(spark, tmp_path):
+    """A path with a URI scheme reads through the Hadoop line reader."""
     p = os.path.join(tmp_path, "r.csv")
     with open(p, "w", encoding="utf-8") as f:
         f.write("id,col1\n5,zz\n")
-    src = CsvSource(p, MappingA(), engine="rdd")
+    src = CsvSource(pathlib.Path(p).as_uri(), MappingA())
     rows = src.load_raw(spark).orderBy(SRC_POS).collect()
     assert [r[SRC_POS] for r in rows] == [0, 1]
     assert rows[1]._c0 == "5"
